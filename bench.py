@@ -282,8 +282,7 @@ def main() -> None:
     for _ in range(3):
         for name in HEADLINE:
             samples[name].append(run_once(spark, name, SF_DIR))
-    # Post-suite sentinel brackets the measured rounds (the streaming
-    # section below has its own windows and is excluded on purpose).
+    # Post-suite sentinel brackets the measured rounds.
     sentinel_post = host_sentinel(spark)
     per_query = {
         name: round(sorted(ts)[1], 3) for name, ts in samples.items()
@@ -300,97 +299,6 @@ def main() -> None:
     }
     if comparison:
         payload.update(comparison)
-    # Streaming section: the reference is a ws->kafka connector, so its
-    # parity surface deserves measured numbers alongside the batch suite —
-    # frames/sec through the full ws-source -> memory-sink path plus
-    # per-microbatch latency (tools/stream_bench.py documents coverage).
-    # A streaming hiccup must not void the batch numbers: record the error
-    # string instead of raising.
-    try:
-        from tools.stream_bench import measure as stream_measure
-
-        # 150k frames / 37.5k-row admission batches (n//4 cap): a
-        # multi-second steady-state window (the round-11
-        # measurement-window lesson) inside the measured frontier's
-        # flat region (STREAM_FRONTIER.json: 117-122k fps at 50-100k
-        # admission, capped latency) — see tools/stream_bench.py
-        s = stream_measure(spark, n=150000, queryName="bench_stream")
-        payload["streaming"] = {
-            "ingest_fps": s["value"],
-            "steady_state_fps": s["steady_state_fps"],
-            "microbatch_ms_p50": s["microbatch_ms_p50"],
-            "microbatch_ms_max": s["microbatch_ms_max"],
-            "n_frames": s["n_frames"],
-            "elapsed_sec": s["elapsed_sec"],
-        }
-        # Multi-connection source (websocket_multi, round-9): same total
-        # volume over 1 vs 4 sockets through IDENTICAL machinery
-        # (subprocess feed servers, per-feed admission) — the ratio is
-        # the source-scaling figure. Decode shares the driver GIL, so
-        # expect sub-linear; the 4 partitions' real win is N-wide
-        # downstream parallelism (stream_bench.measure_multi documents
-        # the split). Its own try: a multi failure must not discard the
-        # single-connection numbers already captured above.
-        try:
-            from tools.stream_bench import measure_multi as stream_measure_multi
-
-            m1 = stream_measure_multi(
-                spark, n=100000, n_feeds=1, queryName="bench_stream_multi1"
-            )
-            m4 = stream_measure_multi(
-                spark, n=100000, n_feeds=4, queryName="bench_stream_multi4"
-            )
-            payload["streaming"]["multi_1conn_fps"] = m1["value"]
-            payload["streaming"]["multi_4conn_fps"] = m4["value"]
-            payload["streaming"]["multi_4conn_steady_fps"] = m4[
-                "steady_state_fps"
-            ]
-            payload["streaming"]["multi_scaling_vs_1conn"] = round(
-                m4["value"] / m1["value"], 2
-            )
-            if m4["steady_state_fps"] and m1["steady_state_fps"]:
-                payload["streaming"]["multi_steady_scaling_vs_1conn"] = round(
-                    m4["steady_state_fps"] / m1["steady_state_fps"], 2
-                )
-            # decode-path scaling (round-9 VERDICT item 6): raw
-            # source-side ingest fps 1 vs 4 sockets, no microbatch
-            # pacing — the per-socket retention figure. Ratio of
-            # median fps over 3 interleaved trials (single-trial
-            # ratios swing ~0.87-1.08 on this host). EQUAL PER-SOCKET
-            # windows of 1.2M frames (round 11, VERDICT item 6): at
-            # 300k total the 4-conn window was ~0.4 s — scheduler
-            # jitter swung per-trial ratios 0.52-1.16 and per-worker
-            # timelines showed NO straggler, so the old 0.798 "floor"
-            # was window noise; and an equal-TOTAL split still caught
-            # the 4-conn ramp (~2 s window under-measured fps4 ~20%).
-            # With ~5-6 s windows on both sides the interleaved
-            # ratio-of-medians is ~1.0.
-            from tools.stream_bench import measure_raw_ingest
-
-            fps1s, fps4s, rets = [], [], []
-            for _ in range(3):
-                r1 = measure_raw_ingest(1200000, 1)
-                r4 = measure_raw_ingest(4800000, 4)
-                fps1s.append(r1["fps"])
-                fps4s.append(r4["fps"])
-                rets.append(round(r4["fps"] / 4 / r1["fps"], 3))
-            f1, f4 = sorted(fps1s)[1], sorted(fps4s)[1]
-            rets.sort()
-            payload["streaming"]["raw_ingest_1conn_fps"] = f1
-            payload["streaming"]["raw_ingest_4conn_fps"] = f4
-            payload["streaming"]["per_socket_retention"] = round(
-                f4 / 4 / f1, 3
-            )
-            payload["streaming"]["per_socket_retention_spread"] = [
-                rets[0],
-                rets[-1],
-            ]
-        except Exception as exc:  # noqa: BLE001 - keep the single-conn numbers
-            payload["streaming"]["multi_error"] = (
-                f"{type(exc).__name__}: {exc}"[:200]
-            )
-    except Exception as exc:  # noqa: BLE001 - bench must still emit batch numbers
-        payload["streaming"] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
     # Emit the one machine-readable line ONLY after the JVM is down:
     # round 6's BENCH artifact came back "parsed: null" because a
     # late-arriving `WARN DAGScheduler` line (the JVM writes to the same
@@ -401,24 +309,10 @@ def main() -> None:
     # fit the driver's 2000-char stdout-tail window (round-10's
     # BENCH_r10.json came back "parsed: null" because the 2156-char line
     # lost its head to the tail truncation — VERDICT r10 item 5), so if
-    # the full line exceeds the budget the stdout copy compacts the
-    # streaming block to its headline figures and notes where the rest
-    # lives.
+    # the full line exceeds the budget the stdout copy is compacted and
+    # notes where the rest lives.
     full_line = json.dumps(payload)
     _STDOUT_BUDGET = 1950
-    candidates = [payload]
-    slim = None
-    if isinstance(payload.get("streaming"), dict):
-        slim_keys = (
-            "ingest_fps", "steady_state_fps", "microbatch_ms_p50",
-            "microbatch_ms_max", "multi_scaling_vs_1conn",
-            "per_socket_retention", "error", "multi_error",
-        )
-        slim = {
-            k: v for k, v in payload["streaming"].items() if k in slim_keys
-        }
-        slim["full"] = "BENCH_LAST.json"
-        candidates.append({**payload, "streaming": slim})
     core_extra = (
         "baseline_common_ratio", "baseline_ratio_median",
         "regressed_over_2x", "ext_pin_ratios", "host_sentinel",
@@ -429,27 +323,22 @@ def main() -> None:
         if k in payload
     }
     extras = {k: payload[k] for k in core_extra if k in payload}
-    with_streaming = {"streaming": slim} if slim is not None else {}
-    # compaction ladder (round-12: the streaming block must survive
-    # further down the ladder than it used to — VERDICT r11 item 3
-    # found the r-numbered artifact's parsed line had dropped it):
-    # 3dp queries → 2dp queries → fewer ratio extras → finally the
-    # ADVICE candidate with NO per-query map at all, which is bounded
-    # regardless of how many queries the headline set grows to.
+    # compaction ladder: full payload → 3dp queries with the ratio
+    # extras → 2dp queries → finally NO per-query map at all, which is
+    # bounded regardless of how many queries the headline set grows to.
     core2 = dict(core)
     if isinstance(core2.get("queries"), dict):
         core2["queries"] = {
             k: round(v, 2) for k, v in core2["queries"].items()
         }
-    candidates += [
-        {**core, **extras, **with_streaming, "full": "BENCH_LAST.json"},
-        {**core2, **extras, **with_streaming, "full": "BENCH_LAST.json"},
+    candidates = [
+        payload,
+        {**core, **extras, "full": "BENCH_LAST.json"},
         {**core2, **extras, "full": "BENCH_LAST.json"},
         {
             **{k: payload[k] for k in ("metric", "value", "unit", "sf")
                if k in payload},
             **extras,
-            **with_streaming,
             "n_queries": len(core.get("queries") or {}),
             "full": "BENCH_LAST.json",
         },

@@ -17,26 +17,23 @@ def test_query_matches_oracle(spark, duck, sf_dir, name):
 
 
 def test_verify_artifact_covers_registry():
-    """The newest committed VERIFY_r{N}.json must carry one entry per
+    """The committed REGISTRY_VERIFY.json must carry one entry per
     registered query — round 4 shipped an artifact that was silently one
     key short because a query was registered after the last regeneration.
     This makes regeneration un-skippable: adding or renaming a registry
     key turns the suite red until
-    ``python tools/verify_queries.py /root/testdata/sf0.01 --json VERIFY_r{N}.json``
+    ``python tools/verify_queries.py /root/testdata/sf0.01 --json REGISTRY_VERIFY.json``
     is re-run (verify_queries itself also warns when a --json artifact is
-    written from a subset run).
+    written from a subset run). The file name is the repo's own: the
+    r-numbered ``VERIFY_r{N}.json`` files are round summaries in another
+    schema.
     """
-    import glob
     import json
     import os
-    import re
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = glob.glob(os.path.join(repo, "VERIFY_r*.json"))
-    assert arts, "no VERIFY_r{N}.json artifact committed"
-    latest = max(
-        arts, key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1))
-    )
+    latest = os.path.join(repo, "REGISTRY_VERIFY.json")
+    assert os.path.exists(latest), "no REGISTRY_VERIFY.json artifact committed"
     with open(latest) as fh:
         artifact = json.load(fh)
     keys = set(artifact["results"])

@@ -1236,16 +1236,13 @@ def test_max_records_per_batch_caps_microbatches(spark, tmp_path):
 # Multi-connection source: N sockets -> N input partitions
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("reader_mode", ["process", "thread"])
-def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path, reader_mode):
+def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path):
     """Two independent ws servers through one `websocket_multi` stream:
     every frame from BOTH feeds must land tagged with its feed_id, each
     feed's frames must arrive in per-feed connection order, and each
     (batch, feed) slice must occupy its own input partition — the
-    N-sockets ⇒ N-partitions claim (round-8 VERDICT item 2).  Runs in
-    BOTH reader modes: the round-10 default (subprocess decode, blob
-    slices unpacked executor-side) and the in-process thread fallback —
-    identical observable contract."""
+    N-sockets ⇒ N-partitions claim (round-8 VERDICT item 2), with
+    subprocess decode and blob slices unpacked executor-side."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -1262,7 +1259,6 @@ def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path, reader_mode):
     stream = (
         spark.readStream.format("websocket_multi")
         .option("urls", _json.dumps([server_a.url, server_b.url]))
-        .option("reader_mode", reader_mode)
         # cap admission to 2 frames/feed/batch so each feed spans >=4
         # batches: without it, process-mode child-spawn stagger under
         # suite load can drain one feed entirely before the other's
@@ -1365,8 +1361,7 @@ def test_websocket_multi_admission_cap_drains(spark, tmp_path):
     cap anchored at the COMMITTED (pruned) frontier froze latestOffset at
     one cap window — after the first capped batch, latestOffset == last
     end ⇒ no new batch ⇒ no commit ⇒ no progress, measured live as
-    2500/20000 frames then a 300 s stall (tools/stream_bench.
-    measure_multi). The fix anchors the window at the PLANNED frontier
+    2500/20000 frames then a 300 s stall. The fix anchors the window at the PLANNED frontier
     (maxOffsetsPerTrigger semantics). This test drains 6+ cap windows per
     feed: it deadlocks at 40 rows on the broken anchoring."""
     import json as _json
@@ -1843,9 +1838,11 @@ def test_feed_proc_pack_frames_bit_identical():
 def test_feed_proc_reader_survives_non_wserror(monkeypatch):
     """ADVICE r10 receipt: a non-WsError escape from the decode loop
     (decode bug, unwrapped OSError) must NOT kill the reader thread
-    silently — the child would stay alive with a dead reader and the
-    parent pump would block forever with no respawn. The redial loop
-    now logs and backs off for ANY exception, same as connection loss."""
+    silently — the feed child would stay alive with a dead reader and
+    the parent pump would block forever with no respawn; the in-process
+    `_FeedWorker` would stop delivering with no message. Both run the
+    one shared connection loop, which logs and backs off for ANY
+    exception, same as connection loss."""
     import threading
 
     from ws_to_kafka_spark.sources import feed_proc, ws_client
@@ -1859,7 +1856,7 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
         def connect(self):
             if len(dials) == 1:
                 raise ValueError("decode bug standing in for any escape")
-            # second dial: deliver one frame, then raise mid-iteration
+            # later dials: deliver one frame, then raise mid-iteration
             return None
 
         def send(self, msg):
@@ -1874,26 +1871,44 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
 
     monkeypatch.setattr(ws_client, "WsClient", ExplodingClient)
 
+    # a loopback url: nothing resolves or dials for real
+    url = "ws://127.0.0.1:9/feed"
     pending: list = []
     lock = threading.Lock()
-    stop = threading.Event()
-    cfg = {"url": "ws://test", "reconnect_delay": 0.01}
-    t = threading.Thread(
-        target=feed_proc._reader_loop,
-        args=(cfg, pending, lock, stop, {"client": None}),
-        daemon=True,
-    )
-    t.start()
-    deadline = time.time() + 10
-    while time.time() < deadline:
+
+    def n_pending():
         with lock:
-            n = len(pending)
-        if len(dials) >= 3 and n >= 1:
-            break  # survived the ValueError AND the mid-stream RuntimeError
-        time.sleep(0.02)
-    stop.set()
-    t.join(timeout=5)
-    assert not t.is_alive()
-    assert len(dials) >= 3, f"reader did not redial past the escapes: {dials}"
-    with lock:
-        assert len(pending) >= 1, "the delivered frame was lost"
+            return len(pending)
+
+    worker = _FeedWorker(
+        url=url,
+        subscribe=None,
+        interval_seconds=0.0,
+        interval_messages=(),
+        reconnect_delay=0.01,
+    )
+    drivers = [
+        (
+            "feed_proc",
+            feed_proc._connection(
+                {"url": url, "reconnect_delay": 0.01}, pending, lock
+            ),
+            n_pending,
+        ),
+        ("_FeedWorker", worker, lambda: len(worker.snapshot(0)[0])),
+    ]
+    for name, feed, delivered in drivers:
+        dials.clear()
+        t = feed.start()
+        deadline = time.time() + 10
+        while time.time() < deadline:
+            if len(dials) >= 3 and delivered() >= 1:
+                break  # survived the ValueError AND the mid-stream RuntimeError
+            time.sleep(0.02)
+        feed.stop()
+        assert len(dials) >= 3, (
+            f"{name}: reader did not redial past the escapes: {dials}"
+        )
+        assert delivered() >= 1, f"{name}: the delivered frame was lost"
+        t.join(timeout=5)
+        assert not t.is_alive(), f"{name}: reader outlived stop()"

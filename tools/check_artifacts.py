@@ -1,4 +1,4 @@
-"""Commit-time guard: the newest VERIFY_r{N}.json must cover the registry
+"""Commit-time guard: REGISTRY_VERIFY.json must cover the registry
 EXACTLY — one entry per registered query, no extras.
 
 tests/test_queries.py::test_verify_artifact_covers_registry enforces the
@@ -6,16 +6,17 @@ same invariant in the suite, but twice now (rounds 4 and 5) a query was
 registered in a final commit without regenerating the artifact, leaving
 HEAD red on a clean checkout. This script is the pre-commit teeth: the
 installed hook (tools/install_hooks.sh -> .git/hooks/pre-commit) runs it
-whenever a commit stages files under ws_to_kafka_spark/operators/ or a
-VERIFY artifact, comparing the STAGED artifact against the registry as
-imported from the working tree.
+whenever a commit stages files under ws_to_kafka_spark/operators/ or the
+artifact itself, comparing the STAGED artifact against the registry as
+imported from the working tree. The artifact has a fixed name of its
+own: the r-numbered ``VERIFY_r{N}.json`` round files (still covered by
+the ``--orphans`` check) are summaries in another schema.
 
 Exit 0 = consistent; exit 1 prints the drift and the regeneration command.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -26,15 +27,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def latest_artifact() -> str:
-    arts = glob.glob(os.path.join(REPO, "VERIFY_r*.json"))
-    if not arts:
-        print("check_artifacts: no VERIFY_r{N}.json present", file=sys.stderr)
+ARTIFACT = os.path.join(REPO, "REGISTRY_VERIFY.json")
+
+
+def registry_artifact() -> str:
+    if not os.path.exists(ARTIFACT):
+        print("check_artifacts: no REGISTRY_VERIFY.json present", file=sys.stderr)
         sys.exit(1)
-    return max(
-        arts,
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
+    return ARTIFACT
 
 
 def artifact_keys(path: str, staged: bool) -> set[str]:
@@ -130,7 +130,7 @@ def main() -> None:
         warn_unstaged_operators()
     from ws_to_kafka_spark.operators import QUERIES
 
-    path = latest_artifact()
+    path = registry_artifact()
     have = artifact_keys(path, staged)
     want = set(QUERIES)
     missing, extra = sorted(want - have), sorted(have - want)

@@ -2,8 +2,8 @@
 # Install the repo's git hooks (run once per clone):
 #   sh tools/install_hooks.sh
 #
-# pre-commit: when a commit touches the operator registry or a VERIFY
-# artifact, require the STAGED newest VERIFY_r{N}.json to cover the
+# pre-commit: when a commit touches the operator registry or the
+# REGISTRY_VERIFY.json artifact, require the STAGED artifact to cover the
 # registry exactly (tools/check_artifacts.py) — the round-4/round-5
 # "registered a query, forgot the artifact" drift becomes un-committable.
 set -e
@@ -17,9 +17,9 @@ python tools/check_artifacts.py --orphans || {
     echo "pre-commit: orphaned round artifacts (see above)" >&2
     exit 1
 }
-if git diff --cached --name-only | grep -qE '^(ws_to_kafka_spark/operators/|VERIFY_r)'; then
+if git diff --cached --name-only | grep -qE '^(ws_to_kafka_spark/operators/|REGISTRY_VERIFY\.json)'; then
     python tools/check_artifacts.py --staged || {
-        echo "pre-commit: VERIFY artifact out of sync with registry (see above)" >&2
+        echo "pre-commit: REGISTRY_VERIFY.json out of sync with registry (see above)" >&2
         exit 1
     }
 fi

@@ -9,9 +9,9 @@ rounding). Usage::
     python tools/verify_queries.py [sf_dir] [query ...] [--json PATH]
 
 ``--json PATH`` additionally writes a machine-readable artifact (the
-per-round ``VERIFY_r{N}.json``: the driver samples only ~50 keys/round,
-so the committed artifact is the full-registry evidence the judge asked
-for in round 3, item #4).
+committed ``REGISTRY_VERIFY.json``, the full-registry evidence that
+``tests/test_queries.py`` and ``tools/check_artifacts.py`` check
+against the registry).
 """
 
 from __future__ import annotations
@@ -112,7 +112,7 @@ def main() -> int:
             # registry — a subset --json run is for local iteration only.
             print(
                 f"WARNING: --json artifact covers {len(names)}/{len(QUERIES)} "
-                "registry keys (subset run) — do not commit as VERIFY_r{N}.json",
+                "registry keys (subset run) — do not commit as REGISTRY_VERIFY.json",
                 file=sys.stderr,
             )
         with open(json_path, "w") as fh:

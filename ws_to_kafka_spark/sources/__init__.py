@@ -1,4 +1,2 @@
 """Streaming sources: the WebSocket source (reference parity for
 /root/reference/src/wsclient.hpp) exposed as a PySpark Python DataSource."""
-
-from .websocket import WebSocketDataSource, register_websocket_source  # noqa: F401

@@ -14,11 +14,15 @@ Wire format (child stdout, little-endian):
     [u32 body_bytes][u32 n_frames]  body
     body = n_frames x ( [u64 ts_micros_utc][u32 len][payload bytes] )
 
-The child owns the reference connection semantics — dial -> subscribe ->
-read -> redial with backoff, drift-free interval resends — the same
-loop as ``_FeedWorker`` (reference wsclient.hpp:132-168,
-interval_timer.hpp:23-38); the parent side (`websocket.py`) only moves
-opaque byte batches, and executors unpack frames in parallel.
+The connection itself — dial -> subscribe -> read -> redial with backoff,
+drift-free interval resends — is ``ws_client.FeedConnection``, the one
+loop every reader in this package shares; this child adds only its
+per-frame step (timestamp and enqueue) and the pending list's flush
+loop. The parent side (`websocket.py`) only moves opaque byte batches,
+and executors unpack frames in parallel.
+
+The module imports no pyspark (``ws_client`` is stdlib-only), so the
+child starts in tens of milliseconds.
 """
 
 from __future__ import annotations
@@ -28,6 +32,8 @@ import struct
 import sys
 import threading
 import time
+
+from .ws_client import RECONNECT_DELAY_S, FeedConnection
 
 _FLUSH_SECONDS = 0.015
 
@@ -78,78 +84,25 @@ def pack_frames(frames: list) -> bytes:
     return b"".join(parts)
 
 
-def _reader_loop(cfg: dict, pending: list, lock: threading.Lock,
-                 stop: threading.Event, client_box: dict) -> None:
-    from .ws_client import WsClient, WsError
+def _connection(cfg: dict, pending: list, lock: threading.Lock) -> FeedConnection:
+    """The shared connection loop, with this child's per-frame step:
+    timestamp and enqueue. That step is the serial path (one reader
+    thread per connection), so header packing is batched into the flush
+    loop (`pack_frames`)."""
 
-    reconnect = float(cfg.get("reconnect_delay", 5.0))
-    while not stop.is_set():
-        # constructor INSIDE the try and the finally guarded: an
-        # exception from either (bad URL parse, close on a half-dead
-        # socket) must hit the same backoff-redial as everything else,
-        # not escape the loop and kill the reader thread while the
-        # flush loop keeps the child alive (round-12 ADVICE — the two
-        # remaining silent kill paths of the round-10 broad-except fix)
-        client = None
-        try:
-            client = WsClient(cfg["url"])
-            client.connect()
-            if cfg.get("subscribe"):
-                client.send(cfg["subscribe"])
-            client_box["client"] = client
-            for payload in client.frames():
-                # per-frame work is the serial path (one reader thread
-                # per connection): just timestamp and enqueue — header
-                # packing is batched into the flush loop (pack_frames)
-                ts = int(time.time() * 1_000_000)
-                with lock:
-                    pending.append((ts, bytes(payload)))
-                if stop.is_set():
-                    break
-        except WsError:
-            pass
-        except Exception:  # noqa: BLE001 — ADVICE r10: a non-WsError
-            # escape (decode bug, unwrapped OSError) must not kill the
-            # reader thread silently while the flush loop keeps the
-            # child alive — the parent pump would block on read()
-            # forever with no respawn. Log and fall through to the same
-            # backoff-redial the reference uses for connection loss.
-            import traceback
+    def on_frame(payload: bytes) -> None:
+        ts = int(time.time() * 1_000_000)
+        with lock:
+            pending.append((ts, bytes(payload)))
 
-            traceback.print_exc(file=sys.stderr)
-            sys.stderr.flush()
-        finally:
-            client_box["client"] = None
-            if client is not None:
-                try:
-                    client.close_socket()
-                except Exception:  # noqa: BLE001 — half-dead socket
-                    pass
-        if not stop.is_set():
-            stop.wait(reconnect)
-
-
-def _timer_loop(cfg: dict, stop: threading.Event, client_box: dict) -> None:
-    """Drift-free fixed-rate resend (deadline += interval, never
-    now + interval) — the reference's interval_timer semantics, now
-    owned by the connection's process."""
-    from .ws_client import WsError
-
-    interval = float(cfg.get("interval", 0) or 0)
-    messages = cfg.get("interval_messages") or []
-    if interval <= 0 or not messages:
-        return
-    deadline = time.monotonic() + interval
-    while not stop.wait(max(0.0, deadline - time.monotonic())):
-        deadline += interval
-        client = client_box.get("client")
-        if client is None:
-            continue  # disconnected — the reference drops the tick too
-        for msg in messages:
-            try:
-                client.send(msg)
-            except WsError:
-                break
+    return FeedConnection(
+        cfg["url"],
+        on_frame,
+        subscribe=cfg.get("subscribe"),
+        interval=float(cfg.get("interval", 0) or 0),
+        interval_messages=cfg.get("interval_messages") or (),
+        reconnect_delay=float(cfg.get("reconnect_delay", RECONNECT_DELAY_S)),
+    )
 
 
 def main(argv: list[str]) -> int:
@@ -157,18 +110,8 @@ def main(argv: list[str]) -> int:
     out = sys.stdout.buffer
     pending: list = []
     lock = threading.Lock()
-    stop = threading.Event()
-    client_box: dict = {"client": None}
-    reader = threading.Thread(
-        target=_reader_loop, args=(cfg, pending, lock, stop, client_box),
-        name="ws-proc-feed", daemon=True,
-    )
-    reader.start()
-    timer = threading.Thread(
-        target=_timer_loop, args=(cfg, stop, client_box),
-        name="ws-proc-interval", daemon=True,
-    )
-    timer.start()
+    conn = _connection(cfg, pending, lock)
+    conn.start("ws-proc-feed")
     # Single-writer flush loop: every _FLUSH_SECONDS the accumulated
     # frames leave as ONE batch. A closed pipe (parent stopped the
     # stream) is the shutdown signal.
@@ -187,7 +130,7 @@ def main(argv: list[str]) -> int:
             except (BrokenPipeError, OSError):
                 return 0
     finally:
-        stop.set()
+        conn.stop()
 
 
 if __name__ == "__main__":

@@ -6,7 +6,8 @@ Reference behaviors reproduced (``/root/reference/src/wsclient.hpp``):
 * connect → (TLS) → handshake → **send subscribe message** → read loop
   (``wsclient.hpp:132-168``; subscribe at ``:144``);
 * on connection error: log, sleep 5 s, full re-resolve/re-handshake/
-  re-subscribe (``wsclient.hpp:158-162``, ``kErrorDelay`` at ``:22``);
+  re-subscribe (``wsclient.hpp:158-162``, ``kErrorDelay`` at ``:22``) —
+  both readers below run this one loop, ``ws_client.FeedConnection``;
 * handshake/idle timeouts 2 s / 10 s with ping keep-alive
   (``wsclient.hpp:20-21,141-142``);
 * periodic control messages re-sent every ``interval`` seconds
@@ -40,7 +41,6 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 from collections import deque
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
@@ -62,7 +62,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .ws_client import RECONNECT_DELAY_S, WsClient, WsError
+from .ws_client import RECONNECT_DELAY_S, FeedConnection
 
 # value is BINARY, not string: the reference forwards frame bytes verbatim
 # (src/main.cpp:48-50 hands the payload pointer straight to
@@ -81,8 +81,10 @@ class _Record:
 
 
 class _FeedWorker:
-    """Background connection owner: dial → subscribe → read → buffer,
-    redialing forever on error (the reference's Start() loop)."""
+    """Retention buffer over one `FeedConnection` (dial → subscribe →
+    read, redialing forever — the reference's Start() loop): numbers
+    each frame, stamps its arrival time and keeps the newest
+    ``retention`` frames for the reader."""
 
     def __init__(
         self,
@@ -93,83 +95,23 @@ class _FeedWorker:
         reconnect_delay: float = RECONNECT_DELAY_S,
         retention: int = 100_000,
     ):
-        self._url = url
-        self._subscribe = subscribe
-        self._interval = interval_seconds
-        self._interval_messages = interval_messages
-        self._reconnect_delay = reconnect_delay
         self._buffer: deque[_Record] = deque(maxlen=retention)
         self._lock = threading.Lock()
         self._next_index = 0
-        self._stop = threading.Event()
-        self._client: WsClient | None = None
-        self._reader_thread: threading.Thread | None = None
-        self._timer_thread: threading.Thread | None = None
-
-    # -- lifecycle ----------------------------------------------------------
-
-    def start(self) -> None:
-        self._reader_thread = threading.Thread(
-            target=self._run, name="ws-feed", daemon=True
+        self._conn = FeedConnection(
+            url,
+            self._append,
+            subscribe=subscribe,
+            interval=interval_seconds,
+            interval_messages=interval_messages,
+            reconnect_delay=reconnect_delay,
         )
-        self._reader_thread.start()
-        if self._interval > 0 and self._interval_messages:
-            self._timer_thread = threading.Thread(
-                target=self._run_timer, name="ws-interval", daemon=True
-            )
-            self._timer_thread.start()
+
+    def start(self) -> threading.Thread:
+        return self._conn.start("ws-feed")
 
     def stop(self) -> None:
-        self._stop.set()
-        client, self._client = self._client, None
-        if client is not None:
-            try:
-                client.close()
-            except Exception:
-                pass
-
-    def _run(self) -> None:
-        """Reference Start() semantics: infinite dial loop, 5 s backoff,
-        re-subscribe after every reconnect (wsclient.hpp:132-168). A CLEAN
-        server close also redials: the reference's while(keep_running_)
-        wraps the whole connect+run sequence, so only Shutdown() ends it —
-        the feed is expected to be persistent."""
-        while not self._stop.is_set():
-            client = WsClient(self._url)
-            try:
-                client.connect()
-                if self._subscribe:
-                    client.send(self._subscribe)
-                self._client = client
-                for payload in client.frames():
-                    self._append(payload)
-                    if self._stop.is_set():
-                        break
-            except WsError:
-                pass
-            finally:
-                self._client = None
-                client.close_socket()
-            if not self._stop.is_set():
-                self._stop.wait(self._reconnect_delay)
-
-    def _run_timer(self) -> None:
-        """Drift-free fixed-rate resend (interval_timer.hpp:23-38:
-        deadline += interval, never now + interval)."""
-        deadline = time.monotonic() + self._interval
-        while not self._stop.wait(max(0.0, deadline - time.monotonic())):
-            deadline += self._interval
-            client = self._client
-            if client is None:
-                continue  # disconnected — reference drops the tick too
-            # All frame writes — these interval messages, the reader
-            # thread's pong/ping replies, stop()'s close — serialize on
-            # WsClient's internal write lock.
-            for msg in self._interval_messages:
-                try:
-                    client.send(msg)
-                except WsError:
-                    break  # write failure is logged-and-dropped in the ref
+        self._conn.stop()
 
     # -- buffer -------------------------------------------------------------
 
@@ -188,18 +130,6 @@ class _FeedWorker:
         with self._lock:
             records = [r for r in self._buffer if r.index >= start_index]
             return records, self._next_index
-
-    def peek(self) -> tuple[int, int]:
-        """(next_index, oldest retained index) — the uniform surface
-        shared with `_ProcFeedWorker` for offset planning."""
-        with self._lock:
-            lo = self._buffer[0].index if self._buffer else self._next_index
-            return self._next_index, lo
-
-    def jump(self, start: int) -> None:
-        with self._lock:
-            if start > self._next_index:
-                self._next_index = start
 
     def between(self, start_index: int, end_index: int) -> list[_Record]:
         with self._lock:
@@ -227,10 +157,11 @@ class _ProcFeedWorker:
     """Process-isolated connection owner (round-10): the socket + frame
     decode live in a `feed_proc` child process on its own core; this
     driver-side shell pumps length-prefixed batches off the pipe —
-    O(1) Python work per BATCH — and serves the same peek/between/
-    prune/jump surface as the thread-mode `_FeedWorker`.  Four sockets
-    through the round-9 thread design totalled 0.93x ONE socket (GIL);
-    per-frame work now runs N-wide in children and executors."""
+    O(1) Python work per BATCH — and serves the peek/batches_between/
+    prune/jump surface `MultiWebSocketStreamReader` plans offsets from.
+    Four sockets through the round-9 in-process thread design totalled
+    0.93x ONE socket (GIL); per-frame work now runs N-wide in children
+    and executors."""
 
     def __init__(self, cfg: dict, retention: int = 100_000):
         self._cfg = dict(cfg)
@@ -281,8 +212,9 @@ class _ProcFeedWorker:
                 "ws_to_kafka_spark.sources.feed_proc",
                 json.dumps(self._cfg),
             ],
+            # stderr is inherited: the child's connection loop logs any
+            # non-WsError traceback there before it redials
             stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
             env=env,
             preexec_fn=_die_with_parent,
         )
@@ -352,7 +284,7 @@ class _ProcFeedWorker:
         except Exception:
             pass
 
-    # -- the reader-facing surface (shared with _FeedWorker) ---------------
+    # -- the reader-facing surface -------------------------------------------
 
     def peek(self) -> tuple[int, int]:
         """(next_index, oldest retained index)."""
@@ -571,23 +503,12 @@ def register_websocket_source(spark) -> None:
 _MULTI_SCHEMA_DDL = "value binary, ws_timestamp timestamp, feed_id int"
 
 
-class _FeedSlice(InputPartition):
-    """One feed's share of a microbatch. InputPartitions are pickled to
-    executors, so the record slice rides inside — the same driver→executor
-    volume the simple reader ships, but landing as N PARALLEL map tasks
-    with no exchange: downstream stateless work (projection, key
-    assignment, sink write) runs N-wide straight off the source."""
-
-    def __init__(self, feed_id: int, rows: list):
-        self.feed_id = feed_id
-        self.rows = rows
-
-
 class _FeedBlobSlice(InputPartition):
-    """One feed's share of a microbatch in PROCESS reader mode: the
-    child's packed batches ride to the executor as opaque bytes and the
-    per-frame unpack (struct walk + timestamp decode) runs THERE — the
-    driver never touches individual frames."""
+    """One feed's share of a microbatch: the child's packed batches ride
+    to the executor as opaque bytes and the per-frame unpack (struct
+    walk + timestamp decode) runs THERE — the driver never touches
+    individual frames. InputPartitions are pickled to executors, so N
+    feeds land as N PARALLEL map tasks with no exchange."""
 
     def __init__(
         self, feed_id: int, start: int, end: int, batches: list[tuple]
@@ -669,15 +590,10 @@ class _FeedBlobSlice(InputPartition):
             offsets = np.zeros(m + 1, dtype=np.int64)
             np.cumsum(ln_s, out=offsets[1:])
             total = int(offsets[-1])
-            # value j of frame i lives at body[st_s[i] + (j - offsets[i])]:
-            # one vectorized gather re-packs all payloads contiguously
-            pos = np.repeat(st_s - offsets[:-1], ln_s) + np.arange(
-                total, dtype=np.int64
-            )
-            data = np.frombuffer(body, dtype=np.uint8)[pos]
             # int32 offsets: a child batch body is bounded by the pipe
             # flush cadence (~15 ms of frames), far under 2 GiB — but the
-            # bound is an operating-point assumption, so ENFORCE it: a
+            # bound is an operating-point assumption, so ENFORCE it, and
+            # before the gather index and data copy are allocated: a
             # silent astype wrap would hand Arrow a corrupt offsets
             # buffer (garbage rows, no error). Loud failure instead.
             if total > _BIN_OFFSET_MAX:
@@ -686,6 +602,12 @@ class _FeedBlobSlice(InputPartition):
                     "Arrow binary-offset bound (int32); shrink the child "
                     "flush cadence or batch admission cap"
                 )
+            # value j of frame i lives at body[st_s[i] + (j - offsets[i])]:
+            # one vectorized gather re-packs all payloads contiguously
+            pos = np.repeat(st_s - offsets[:-1], ln_s) + np.arange(
+                total, dtype=np.int64
+            )
+            data = np.frombuffer(body, dtype=np.uint8)[pos]
             val_arr = pa.Array.from_buffers(
                 pa.binary(),
                 m,
@@ -736,9 +658,10 @@ def _multi_arrow_schema():
 
 class MultiWebSocketStreamReader(DataSourceStreamReader):
     """N-connection stream reader: each configured url/subscription gets
-    its own `_FeedWorker` (connection + redial loop + retention buffer)
-    and its own entry in the offset vector, and `partitions()` plans one
-    input partition per feed per microbatch.
+    its own `_ProcFeedWorker` (a `feed_proc` child running the shared
+    connection loop, plus a driver-side retention buffer) and its own
+    entry in the offset vector, and `partitions()` plans one input
+    partition per feed per microbatch.
 
     Why this shape: the reference — and round ≤8's `websocket` source —
     is one socket ⇒ one input partition (SURVEY §4.2), which makes the
@@ -746,15 +669,13 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
     Real feeds shard (per-symbol subscriptions, per-shard endpoints);
     this source turns that sharding into genuine input parallelism.
 
-    Where the work runs (round-10, ``reader_mode`` option): in the
-    default ``process`` mode each connection lives in a `feed_proc`
-    CHILD PROCESS that decodes frames on its own core and ships packed
-    batches up a pipe; the driver does O(1) work per batch and
-    executors unpack frames in parallel (`_FeedBlobSlice`), so N
+    Where the work runs (round-10): each connection lives in a
+    `feed_proc` CHILD PROCESS that decodes frames on its own core and
+    ships packed batches up a pipe; the driver does O(1) work per batch
+    and executors unpack frames in parallel (`_FeedBlobSlice`), so N
     sockets ingest ~N-wide instead of serializing on the driver's GIL
-    (the round-9 thread mode measured 0.93x ONE socket's rate at four
-    sockets; ``reader_mode=thread`` keeps that in-process variant for
-    spawn-restricted environments). Offset planning stays driver-side
+    (the round-9 in-process thread design measured 0.93x ONE socket's
+    rate at four sockets). Offset planning stays driver-side
     (latestOffset/partitions/commit — the Python DataSource API gives
     executors no durable state between batches, and a WebSocket cannot
     be re-dialed per batch without dropping frames). The driver is thus
@@ -774,14 +695,14 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self._options = dict(options)
         self._specs = self._parse_specs(self._options)
-        self._workers: list[_FeedWorker] | None = None
+        self._workers: list[_ProcFeedWorker] | None = None
         # last offsets this reader PLANNED (returned from latestOffset or
         # seen as an end in partitions). The admission cap must window
         # from here, not from the committed/pruned frontier: the engine
         # only delivers commit(end_N) while planning batch N+2, so a cap
         # anchored at the committed frontier deadlocks after one batch —
         # latestOffset == last end ⇒ no new batch ⇒ no commit ⇒ no
-        # progress (hit live in tools/stream_bench.measure_multi).
+        # progress.
         self._planned: list[int] | None = None
 
     @staticmethod
@@ -826,42 +747,28 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
         self._workers = None
         self._planned = None
 
-    def _ensure_workers(self) -> list:
+    def _ensure_workers(self) -> list[_ProcFeedWorker]:
         if self._workers is None:
             opts = self._options
             parsed = json.loads(opts.get("interval_messages") or "[]")
             msgs = [
                 m if isinstance(m, str) else json.dumps(m) for m in parsed
             ]
-            mode = (opts.get("reader_mode") or "process").lower()
             self._workers = []
             for spec in self._specs:
-                if mode == "thread":
-                    w = _FeedWorker(
-                        url=spec["url"],
-                        subscribe=spec["subscribe"],
-                        interval_seconds=float(opts.get("interval", 0) or 0),
-                        interval_messages=tuple(msgs),
-                        reconnect_delay=float(
+                # one decode core per socket
+                w = _ProcFeedWorker(
+                    {
+                        "url": spec["url"],
+                        "subscribe": spec["subscribe"],
+                        "interval": float(opts.get("interval", 0) or 0),
+                        "interval_messages": msgs,
+                        "reconnect_delay": float(
                             opts.get("reconnect_delay", RECONNECT_DELAY_S)
                         ),
-                        retention=int(opts.get("retention", 100_000)),
-                    )
-                else:  # "process" (default): one decode core per socket
-                    w = _ProcFeedWorker(
-                        {
-                            "url": spec["url"],
-                            "subscribe": spec["subscribe"],
-                            "interval": float(opts.get("interval", 0) or 0),
-                            "interval_messages": msgs,
-                            "reconnect_delay": float(
-                                opts.get(
-                                    "reconnect_delay", RECONNECT_DELAY_S
-                                )
-                            ),
-                        },
-                        retention=int(opts.get("retention", 100_000)),
-                    )
+                    },
+                    retention=int(opts.get("retention", 100_000)),
+                )
                 w.start()
                 self._workers.append(w)
         return self._workers
@@ -891,7 +798,7 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
         self._planned = list(out)
         return {"feeds": out}
 
-    def partitions(self, start: dict, end: dict) -> list[_FeedSlice]:
+    def partitions(self, start: dict, end: dict) -> list[_FeedBlobSlice]:
         workers = self._ensure_workers()
         # checkpoint restart replays the last planned batch with offsets
         # this fresh reader never returned — fold them into the planned
@@ -911,27 +818,16 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
                 # docstring.
                 w.jump(s)
                 e = max(e, s)
-            if isinstance(w, _ProcFeedWorker):
-                batches = (
-                    [
-                        (r.index, r.n, r.body)
-                        for r in w.batches_between(s, e)
-                    ]
-                    if e > s
-                    else []
-                )
-                parts.append(_FeedBlobSlice(i, s, e, batches))
-            else:
-                rows = [
-                    (r.value, r.ts, i) for r in w.between(s, e)
-                ] if e > s else []
-                parts.append(_FeedSlice(i, rows))
+            batches = (
+                [(r.index, r.n, r.body) for r in w.batches_between(s, e)]
+                if e > s
+                else []
+            )
+            parts.append(_FeedBlobSlice(i, s, e, batches))
         return parts
 
-    def read(self, partition):
-        if isinstance(partition, _FeedBlobSlice):
-            return partition.batches_iter()
-        return iter(partition.rows)
+    def read(self, partition: _FeedBlobSlice):
+        return partition.batches_iter()
 
     def commit(self, end: dict) -> None:
         if self._workers is None:

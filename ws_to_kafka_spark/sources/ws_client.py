@@ -16,8 +16,10 @@ Semantics mirror the reference client (`/root/reference/src/wsclient.hpp`):
   (``src/wsclient.hpp:144``);
 * the read loop yields one payload per data frame, transparently answering
   pings (``src/wsclient.hpp:206-238``);
-* callers implement the 5 s reconnect loop on ``WsError``
-  (``src/wsclient.hpp:158-162``) — connection state is theirs to own.
+* :class:`FeedConnection` owns the 5 s reconnect loop
+  (``src/wsclient.hpp:132-168``) and the drift-free interval resend
+  (``src/interval_timer.hpp:23-38``) for every reader in this package;
+  callers supply only the per-frame step.
 """
 
 from __future__ import annotations
@@ -28,8 +30,11 @@ import os
 import socket
 import ssl
 import struct
+import sys
 import threading
-from collections.abc import Iterator
+import time
+import traceback
+from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
 from ..uri import Uri, parse_uri
@@ -305,3 +310,108 @@ class WsClient:
                 self._sock.close()
             finally:
                 self._sock = None
+
+
+class FeedConnection:
+    """The reference's whole connection policy for one feed: dial →
+    subscribe → read, redial after ``reconnect_delay`` on ANY failure
+    (``src/wsclient.hpp:132-168``), plus the fixed-rate interval resend
+    through the same connection (``src/interval_timer.hpp:23-38``,
+    ``src/wsclient.hpp:171-182``).
+
+    A CLEAN server close also redials: the reference's
+    ``while(keep_running_)`` wraps the whole connect+run sequence, so only
+    :meth:`stop` ends the loop — the feed is expected to be persistent.
+    ``on_frame`` is called with each data-frame payload on the reader
+    thread; it is the only part that differs between callers.
+    """
+
+    def __init__(
+        self,
+        url: str,
+        on_frame: Callable[[bytes], None],
+        *,
+        subscribe: str | None = None,
+        interval: float = 0.0,
+        interval_messages: Sequence[str] = (),
+        reconnect_delay: float = RECONNECT_DELAY_S,
+    ):
+        self._url = url
+        self._on_frame = on_frame
+        self._subscribe = subscribe
+        self._interval = interval
+        self._interval_messages = tuple(interval_messages)
+        self._reconnect_delay = reconnect_delay
+        self._stop = threading.Event()
+        self._client: WsClient | None = None
+
+    def start(self, name: str = "ws-feed") -> threading.Thread:
+        """Start the reader (and, if configured, the interval timer) as
+        daemon threads; returns the reader thread."""
+        reader = threading.Thread(target=self.run, name=name, daemon=True)
+        reader.start()
+        if self._interval > 0 and self._interval_messages:
+            threading.Thread(
+                target=self._run_timer, name=f"{name}-interval", daemon=True
+            ).start()
+        return reader
+
+    def stop(self) -> None:
+        self._stop.set()
+        client, self._client = self._client, None
+        if client is not None:
+            try:
+                client.close()
+            except Exception:  # noqa: BLE001 — half-dead socket
+                pass
+
+    def run(self) -> None:
+        on_frame, stop = self._on_frame, self._stop
+        while not stop.is_set():
+            # constructor INSIDE the try and the finally guarded: a bad
+            # URL, a decode bug or an unwrapped OSError must hit the same
+            # backoff-redial as a connection loss, never end the reader
+            # thread silently while its owner keeps waiting for frames
+            client = None
+            try:
+                client = WsClient(self._url)
+                client.connect()
+                if self._subscribe:
+                    client.send(self._subscribe)
+                self._client = client
+                for payload in client.frames():
+                    on_frame(payload)
+                    if stop.is_set():
+                        break
+            except WsError:
+                pass
+            except Exception:  # noqa: BLE001 — logged, then redialed
+                traceback.print_exc(file=sys.stderr)
+                sys.stderr.flush()
+            finally:
+                self._client = None
+                if client is not None:
+                    try:
+                        client.close_socket()
+                    except Exception:  # noqa: BLE001 — half-dead socket
+                        pass
+            if not stop.is_set():
+                stop.wait(self._reconnect_delay)
+
+    def _run_timer(self) -> None:
+        """Drift-free fixed-rate resend: deadline += interval, never
+        now + interval."""
+        interval = self._interval
+        deadline = time.monotonic() + interval
+        while not self._stop.wait(max(0.0, deadline - time.monotonic())):
+            deadline += interval
+            client = self._client
+            if client is None:
+                continue  # disconnected — the reference drops the tick too
+            # every frame write (these, the reader's pong/ping replies,
+            # stop()'s close) serializes on WsClient's write lock
+            for msg in self._interval_messages:
+                try:
+                    client.send(msg)
+                except WsError:
+                    break  # write failure is logged-and-dropped in the ref
