@@ -295,6 +295,51 @@ def test_scc_distributed_path_matches_local_kernel(
         evict_sf_dir(dst)
 
 
+def test_scc_scales_batch_width_down_and_restores(
+    spark, tmp_path, monkeypatch
+):
+    """The distributed SCC build scales the batch shuffle width (the
+    conf batch planning reads, ``BATCH_WIDTH_CONF``) down to the graph
+    (~8k edges per partition, floor 4) and restores it on exit. On a
+    session that never set that conf the width is read from
+    ``spark.sql.shuffle.partitions`` and the conf is unset again."""
+    from ws_to_kafka_spark.operators import graph as G
+    from ws_to_kafka_spark.session import BATCH_WIDTH_CONF
+
+    jconf = spark._jsparkSession.sessionState().conf()
+    seen = []
+
+    def inner(spark_, sf_dir_):
+        seen.append(jconf.numShufflePartitions())
+        return spark_.range(0)
+
+    dst = str(tmp_path / "sf_scc_width")
+    _write_transition_corpus(spark, dst, [(1, 2), (2, 1), (2, 3)])
+    monkeypatch.setattr(G, "_SCC_FORCE_DISTRIBUTED", True)
+    monkeypatch.setattr(G, "_scc_assign_build_inner", inner)
+    sess_width = spark.conf.get(BATCH_WIDTH_CONF, None)
+    stream_width = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set(BATCH_WIDTH_CONF, "12")
+        G._scc_assign_build(spark, dst)
+        assert seen == [4]
+        assert jconf.numShufflePartitions() == 12
+        assert spark.conf.get(BATCH_WIDTH_CONF) == "12"
+
+        spark.conf.unset(BATCH_WIDTH_CONF)
+        spark.conf.set("spark.sql.shuffle.partitions", "12")
+        G._scc_assign_build(spark, dst)
+        assert seen == [4, 4]
+        assert spark.conf.get(BATCH_WIDTH_CONF, None) is None
+        assert jconf.numShufflePartitions() == 12
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", stream_width)
+        if sess_width is None:
+            spark.conf.unset(BATCH_WIDTH_CONF)
+        else:
+            spark.conf.set(BATCH_WIDTH_CONF, sess_width)
+
+
 @pytest.mark.heavy  # ~38 s: 12-cycle chain exercising the ROUND COUNT
 # past the old outer cap — round-count evidence (fast-lane budget, r14)
 def test_scc_chained_cycles_beyond_old_outer_cap(spark, tmp_path, monkeypatch):

@@ -1028,6 +1028,30 @@ def test_kmeans_converge_loop_bit_identical_and_exits(
     )
 
 
+def test_embeddings_bytes_sizes_uri_paths(spark, sf_dir):
+    """The convergence gate's input size comes from the Hadoop
+    FileSystem, so a URI ``sf_dir`` (file:// here; s3a://, hdfs://
+    alike) reads the same size as the plain path; os.path cannot size a
+    URI, and without this the size-gated exit could never engage off the
+    local disk. Checksum side files are not data."""
+    import os
+
+    from ws_to_kafka_spark.operators import similarity as S
+
+    p = f"{sf_dir}/embeddings.parquet"
+    want = os.path.getsize(p) if os.path.isfile(p) else sum(
+        os.path.getsize(os.path.join(r, f))
+        for r, _, fs in os.walk(p)
+        for f in fs
+        if not f.startswith(".")
+    )
+    assert want > 0
+    uri = "file://" + os.path.abspath(sf_dir)
+    assert S._embeddings_bytes(spark, uri) == want
+    assert S._embeddings_bytes(spark, sf_dir) == want
+    assert S._embeddings_bytes(spark, uri + "/no_such_dir") == 0
+
+
 def test_knn_ann_recall_clustered_corpus(spark, tmp_path_factory):
     """The regime the approximate build exists for: clustered embeddings
     (25 centers × 20 members, the shape of real model embeddings). LSH

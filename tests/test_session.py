@@ -1,0 +1,33 @@
+"""Session tuning: the batch and streaming shuffle widths ``get_spark`` sets."""
+
+from __future__ import annotations
+
+from ws_to_kafka_spark.session import BATCH_WIDTH_CONF, STREAM_WIDTH_CONF
+
+
+def test_batch_and_streaming_widths_are_separate(spark):
+    """Batch plans take the ``shuffle_partitions`` argument (4 for the
+    test session) through AQE's initial partition number; streaming
+    plans, where AQE is off, take one partition per core, capped at the
+    batch width."""
+    assert spark.conf.get(BATCH_WIDTH_CONF) == "4"
+    assert spark.conf.get(STREAM_WIDTH_CONF) == str(
+        min(spark.sparkContext.defaultParallelism, 4)
+    )
+    jconf = spark._jsparkSession.sessionState().conf()
+    assert jconf.numShufflePartitions() == 4
+
+
+def test_streaming_width_never_exceeds_batch_width(spark):
+    """Below the core count the batch width caps the streaming width, so
+    no host gets more state stores per operator than the batch width."""
+    from ws_to_kafka_spark.session import get_spark
+
+    try:
+        same = get_spark("tests", shuffle_partitions=1)
+        assert same is spark
+        assert spark.conf.get(BATCH_WIDTH_CONF) == "1"
+        assert spark.conf.get(STREAM_WIDTH_CONF) == "1"
+    finally:
+        get_spark("tests", shuffle_partitions=4)
+    assert spark.conf.get(BATCH_WIDTH_CONF) == "4"

@@ -490,6 +490,13 @@ def test_streaming_dedup_keeps_first(spark, tmp_path, event_frames):
         time.sleep(2)  # allow any (wrong) extra rows to surface
         ids = [r.event_id for r in spark.sql("SELECT event_id FROM dedup_test").collect()]
         assert sorted(ids) == list(range(12)), "duplicates leaked through"
+        # the streaming width is the core count capped at the batch width
+        widths = {
+            op["numShufflePartitions"]
+            for p in query.recentProgress
+            for op in p["stateOperators"]
+        }
+        assert widths == {min(spark.sparkContext.defaultParallelism, 4)}
     finally:
         query.stop()
         server.close()

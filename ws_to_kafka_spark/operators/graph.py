@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .. import tables
+from ..session import BATCH_WIDTH_CONF
 from .dedup import _cached_frame, min_label_fixpoint
 from .registry import register
 
@@ -1975,12 +1976,14 @@ def _scc_assign_local(edges: DataFrame) -> DataFrame:
 
 def _scc_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The label/mark frames this build shuffles are O(|V|) rows; at the
-    # session's full shuffle-partition count every propagation round
+    # session's full batch shuffle width every propagation round
     # pays parts-many near-empty tasks per stage (measured 2x wall at
-    # sf0.01 with 32 vs 4).  Scale the conf DOWN for small graphs only
+    # sf0.01 with 32 vs 4).  Scale the width DOWN for small graphs only
     # (~8k edges per partition, floor 4) — big graphs keep the session
-    # setting, so the knob is scale-neutral — and restore it on exit.
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # width, so the knob is scale-neutral — and restore it on exit.
+    # The width is read as batch planning sees it, so a session that
+    # never set BATCH_WIDTH_CONF scales from spark.sql.shuffle.partitions.
+    sess_width = spark.conf.get(BATCH_WIDTH_CONF, None)
     try:
         edges_all = _scc_edges(spark, sf_dir)
         n_edges = edges_all.count()
@@ -1988,14 +1991,15 @@ def _scc_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             _SCC_LAST_STATS.clear()
             _SCC_LAST_STATS.update({"local_kernel": 1})
             return _scc_assign_local(edges_all)
-        try:
-            parts = max(4, min(int(sess_parts), n_edges // 8192))
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        except (TypeError, ValueError):  # non-numeric (e.g. "auto"): skip
-            pass
+        width = spark._jsparkSession.sessionState().conf().numShufflePartitions()
+        parts = max(4, min(width, n_edges // 8192))
+        spark.conf.set(BATCH_WIDTH_CONF, str(parts))
         return _scc_assign_build_inner(spark, sf_dir)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
+        if sess_width is None:
+            spark.conf.unset(BATCH_WIDTH_CONF)
+        else:
+            spark.conf.set(BATCH_WIDTH_CONF, sess_width)
 
 
 def _scc_assign_build_inner(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1378,22 +1378,22 @@ _KM_FORCE_CONVERGE = False  # test hook: force the loop at any size
 _KM_LAST_UPDATES_RUN = 0
 
 
-def _embeddings_bytes(sf_dir: str) -> int:
+def _embeddings_bytes(spark: SparkSession, sf_dir: str) -> int:
     """Driver-side metadata gate input: bytes of the embeddings parquet
-    (file or directory) — no Spark job, deterministic for a fixture."""
-    import os
+    (file or directory) — no Spark job, deterministic for a fixture.
+    Sized through the path's Hadoop FileSystem, so a plain path,
+    ``file://``, s3 or hdfs resolve as the reader resolves them;
+    checksum side files are not counted. A missing input reads 0."""
+    from py4j.protocol import Py4JJavaError
 
-    p = f"{sf_dir}/embeddings.parquet"
     try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
-    except OSError:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/embeddings.parquet")
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return int(fs.getContentSummary(jpath).getLength())
+    except Py4JJavaError:  # no such path, or no FileSystem for the scheme
         return 0
+
+
 #: Slack (in d2 units) around the kernel's numpy minimum inside which a
 #: centroid is still emitted as an argmin CANDIDATE for the exact JVM
 #: re-evaluation. Must exceed (a) gemm-vs-left-fold summation-order
@@ -1674,7 +1674,7 @@ def _kmeans_assign(
         ).withColumn("dcc", _dot(F.col("ce"), F.col("ce")))
 
     converge_loop = _KM_FORCE_CONVERGE or (
-        _embeddings_bytes(sf_dir) >= _KM_CONVERGE_MIN_BYTES
+        _embeddings_bytes(spark, sf_dir) >= _KM_CONVERGE_MIN_BYTES
     )
     global _KM_LAST_UPDATES_RUN
     _KM_LAST_UPDATES_RUN = 0

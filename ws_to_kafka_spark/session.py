@@ -6,6 +6,15 @@ re-planning and skew handling, Arrow on for any pandas exchange, and the
 session timezone pinned to UTC so timestamp semantics match a UTC-naive
 oracle (DuckDB).
 
+``get_spark`` sets two shuffle widths, one for batch plans and one for
+streaming plans, in two confs. ``SQLConf.numShufflePartitions`` returns
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` when AQE
+and partition coalescing are on, as ``_RUNTIME_CONFS`` keeps them for
+every batch query, and ``spark.sql.shuffle.partitions`` when AQE is off,
+as ``StreamExecution`` turns it off in each streaming query's cloned
+session. So the batch width goes in the first conf and the streaming
+(stateful operator) width in the second.
+
 ``ensure_session_confs`` is separated out because the driver harness hands us
 an externally created ``SparkSession``; every conf it sets is dynamically
 settable so we can tune sessions we did not build.
@@ -16,6 +25,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: The shuffle width batch plans read while AQE coalescing is on.
+BATCH_WIDTH_CONF = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+#: The shuffle width streaming plans read (AQE is off in them).
+STREAM_WIDTH_CONF = "spark.sql.shuffle.partitions"
 
 #: Confs that are safe (and necessary) to set on an existing session.
 _RUNTIME_CONFS = {
@@ -52,15 +66,35 @@ def get_spark(
     """Build (or fetch) a local SparkSession tuned for this engine.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.
-    Shuffle partitions default to cores/2 locally. Measured (sf0.1,
-    local[32]): every exchange writes map_tasks x shuffle_partitions
-    blocks, and at test scale that quadratic fan-out — not reducer-side
-    work, which AQE already coalesces — dominates multi-stage queries
-    (16 vs 64 partitions: PageRank 3.0s -> 1.7s, connected components
-    2.4s -> 1.4s, triangles 3.4s -> 1.7s, with no query measurably
-    hurt). On a real cluster these come from spark-submit sized to data
-    volume (~128MB per reduce partition), not from this local heuristic;
-    everything else in the engine is partition-count agnostic.
+
+    Batch width (``BATCH_WIDTH_CONF``): ``shuffle_partitions``, else
+    ``max(cpus // 2, 8)``, else 16 when ``cpus`` is not a number.
+    Measured (sf0.1, local[32]): every exchange writes map_tasks x
+    shuffle_partitions blocks, and at test scale that quadratic fan-out
+    — not reducer-side work, which AQE already coalesces — dominates
+    multi-stage queries (16 vs 64 partitions: PageRank 3.0s -> 1.7s,
+    connected components 2.4s -> 1.4s, triangles 3.4s -> 1.7s, with no
+    query measurably hurt). On a real cluster these come from
+    spark-submit sized to data volume (~128MB per reduce partition), not
+    from this local heuristic; everything else in the engine is
+    partition-count agnostic.
+
+    Streaming width (``STREAM_WIDTH_CONF``): ``defaultParallelism``
+    capped at the batch width, so at most one stateful task per core and
+    one task wave per stage, and never more stores than the batch width.
+    A stateful operator keeps one state store per partition and commits
+    every store in every microbatch, so on a 4-core host 16 partitions
+    cost four waves of store commits per stage. Measured on a 4-core
+    host (perfbench ``ws_sharded_stateful``, 10 interleaved pairs),
+    16 -> 4 partitions took the p50 latency at 500 frames/s from 2.79 s
+    to 1.37 s and the burst drain from 4.7k to 8.3k frames/s; 1, 2 and
+    4 partitions all beat 16. More partitions than the batch width were
+    not measured, hence the cap.
+
+    Restarts: Spark reads the streaming width when a query starts
+    without a checkpoint and records it in the checkpoint's offset
+    metadata. A restart keeps the recorded count, so existing
+    checkpoints keep their width and only new ones take the new width.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -73,7 +107,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(BATCH_WIDTH_CONF, str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -83,4 +117,6 @@ def get_spark(
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    stream_width = min(spark.sparkContext.defaultParallelism, shuffle_partitions)
+    spark.conf.set(STREAM_WIDTH_CONF, str(stream_width))
     return ensure_session_confs(spark)
