@@ -1,4 +1,5 @@
-"""Session tuning: the batch and streaming shuffle widths ``get_spark`` sets."""
+"""Session tuning: the batch and streaming shuffle widths and the
+checkpoint writer ``get_spark`` sets."""
 
 from __future__ import annotations
 
@@ -31,3 +32,39 @@ def test_streaming_width_never_exceeds_batch_width(spark):
     finally:
         get_spark("tests", shuffle_partitions=4)
     assert spark.conf.get(BATCH_WIDTH_CONF) == "4"
+
+
+def test_checkpoint_files_are_written_through_the_file_system_api(
+    spark, tmp_path
+):
+    """``get_spark`` sessions write streaming checkpoint files through
+    ``FileSystemBasedCheckpointFileManager``: still a temp file renamed
+    into place, still with a Hadoop ``.crc`` sibling, and still refusing
+    to overwrite an existing file when ``overwriteIfPossible`` is off."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(managers, "CheckpointFileManager$").__getattr__("MODULE$")
+    root = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    manager = factory.create(
+        root, spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert manager.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    target = jvm.org.apache.hadoop.fs.Path(root, "0")
+    out = manager.createAtomic(target, False)
+    out.write(b"v1\n")
+    out.close()
+    assert (tmp_path / "0").read_bytes() == b"v1\n"
+    assert (tmp_path / ".0.crc").exists()
+
+    with pytest.raises(Py4JJavaError, match="(?i)exist"):
+        again = manager.createAtomic(target, False)
+        again.write(b"v2\n")
+        again.close()
+    assert (tmp_path / "0").read_bytes() == b"v1\n"

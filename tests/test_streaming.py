@@ -1674,6 +1674,69 @@ def test_transform_with_state_checkpoint_restart(spark, tmp_path):
             spark.conf.set(provider_key, old_provider)
 
 
+def test_streaming_dedup_checkpoint_restart(spark, tmp_path):
+    """State-store recovery on the default (HDFS-backed) provider: a
+    ``streaming_dedup`` query is stopped and restarted on its
+    checkpoint, and duplicates of keys seen before the restart must
+    still be dropped, so the restarted query reloaded its dedup state
+    from the delta files the first run wrote."""
+    from ws_to_kafka_spark.streaming.ops import streaming_dedup
+
+    mk = lambda i: json.dumps(
+        {"event_id": i, "user_id": i % 2, "value": float(i),
+         "ts_ms": 1704067200000 + i * 60000}
+    ).encode()
+    # frames are pushed explicitly: the recording server would replay a
+    # frames_per_connection script to EACH connection
+    server = RecordingWsServer(frames_per_connection=[])
+    ckpt = tmp_path / "ckpt"
+    # the memory sink refuses checkpoint recovery — collect via foreachBatch
+    seen: list[int] = []
+
+    def sink(df, _batch_id):
+        seen.extend(r.event_id for r in df.collect())
+
+    def start(name):
+        return (
+            streaming_dedup(
+                _typed_stream(spark, server.url), keys=["event_id"],
+                watermark="1 hour",
+            )
+            .writeStream.foreachBatch(sink)
+            .queryName(name)
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+
+    try:
+        query = start("dedup_restart_1")
+        try:
+            assert wait_until(lambda: server.connections >= 1, timeout=30)
+            for i in range(4):
+                server.push_frame(mk(i))
+            assert wait_until(lambda: len(seen) >= 4, timeout=60), seen
+        finally:
+            query.stop()
+        assert list((ckpt / "state" / "0").glob("*/*.delta")), (
+            "the first run committed no state-store delta files"
+        )
+
+        query2 = start("dedup_restart_2")
+        try:
+            assert wait_until(lambda: server.connections >= 2, timeout=30)
+            for i in (0, 1, 2, 3, 4, 5):  # 0-3 were seen before the restart
+                server.push_frame(mk(i))
+            assert wait_until(lambda: len(seen) >= 6, timeout=60), seen
+            time.sleep(2)  # allow any (wrong) extra rows to surface
+        finally:
+            query2.stop()
+        assert sorted(seen) == list(range(6)), (
+            f"duplicates from before the restart leaked through: {seen}"
+        )
+    finally:
+        server.close()
+
+
 def test_feed_blob_slice_micros_exact_round_trip():
     """ADVICE r10 receipt: process-mode ws_timestamp must be bit-exact
     to the child-recorded integer micros. The old float path
@@ -1919,3 +1982,72 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
         assert delivered() >= 1, f"{name}: the delivered frame was lost"
         t.join(timeout=5)
         assert not t.is_alive(), f"{name}: reader outlived stop()"
+
+
+def test_feed_worker_counts_frames_lost_to_retention(caplog):
+    """Retention overflow is counted, never silent: a full buffer evicts
+    its oldest frame on each append, ``dropped`` counts the evictions,
+    and a read whose admitted range starts below the oldest retained
+    frame logs one WARNING naming the feed and the frames lost."""
+    url = "ws://127.0.0.1:9/feed"  # never dialed: start() is not called
+    worker = _FeedWorker(
+        url=url,
+        subscribe=None,
+        interval_seconds=0.0,
+        interval_messages=(),
+        retention=3,
+    )
+    for i in range(5):
+        worker._append(b"frame-%d" % i)
+    assert worker.dropped == 2
+
+    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        records, next_index = worker.snapshot(0)
+    assert [r.index for r in records] == [2, 3, 4] and next_index == 5
+    warnings = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert len(warnings) == 1
+    assert url in warnings[0].getMessage()
+    assert "2 frames lost" in warnings[0].getMessage()
+
+    caplog.clear()
+    worker.snapshot(2)  # a read past the gap loses nothing
+    assert not caplog.records
+
+
+def test_proc_feed_worker_counts_frames_lost_to_retention(monkeypatch):
+    """The `websocket_multi` buffer evicts whole child batches past
+    ``retention`` frames and counts every frame of each one."""
+    import io
+    import struct
+
+    from ws_to_kafka_spark.sources.websocket import _ProcFeedWorker
+
+    worker = _ProcFeedWorker(
+        {"url": "ws://127.0.0.1:9/feed", "reconnect_delay": 0.0},
+        retention=3,
+    )
+    # three child flushes of two frames each (bodies are opaque here)
+    pipe = b"".join(struct.pack("<II", 4, 2) + b"body" for _ in range(3))
+
+    class FakeChild:
+        stdout = io.BytesIO(pipe)
+
+        def terminate(self):
+            pass
+
+        def wait(self, timeout=None):
+            pass
+
+    spawns = []
+
+    def spawn():
+        spawns.append(1)
+        if len(spawns) > 1:  # the "respawn" after EOF ends the pump
+            worker._stop.set()
+            raise RuntimeError("stop")
+        return FakeChild()
+
+    monkeypatch.setattr(worker, "_spawn", spawn)
+    worker._pump()
+    assert worker.dropped == 4
+    assert worker.peek() == (6, 4)

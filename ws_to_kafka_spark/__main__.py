@@ -34,7 +34,10 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument(
         "--checkpoint",
         default=None,
-        help="checkpoint dir (default: a temp dir — at-most-once, like the reference)",
+        help=(
+            "checkpoint dir, a local directory (default: a temp dir — "
+            "at-most-once, like the reference)"
+        ),
     )
     args = parser.parse_args(argv)
 

@@ -15,6 +15,27 @@ as ``StreamExecution`` turns it off in each streaming query's cloned
 session. So the batch width goes in the first conf and the streaming
 (stateful operator) width in the second.
 
+``get_spark`` also writes every streaming checkpoint file (offset log,
+commit log, HDFS-backed and RocksDB state-store files) through
+``FileSystemBasedCheckpointFileManager`` instead of Spark's default
+``FileContextBasedCheckpointFileManager``. Without native libhadoop,
+Hadoop's local file system runs shell commands for what the native
+library would do: through ``FileContext`` each checkpoint file costs 8
+``readlink`` and 2 ``chmod`` runs, 20 spawned processes in all, and
+through ``FileSystem`` only the 2 ``chmod`` runs, 4 processes (the
+``processes`` delta of ``/proc/stat`` over 50 ``createAtomic`` calls on
+a 4-core host). Every data batch writes 2 such files on a stateless
+query, and on a stateful one 2 plus one delta file per state store.
+Both managers write a temp file and rename it into place, and with
+``overwriteIfPossible=False`` both refuse to replace an existing file.
+``FileSystem``'s rename is atomic only where the store's rename is,
+which holds for the local disk a ``local[...]`` session checkpoints to.
+Hadoop's ``.crc`` siblings and Spark's ``.delta.crc`` state checksums
+are still written and checked. The conf is set only in ``get_spark``,
+never in ``_RUNTIME_CONFS``: a session the driver harness builds may
+checkpoint to HDFS or S3, where only ``FileContext`` promises an atomic
+rename, so it keeps Spark's default.
+
 ``ensure_session_confs`` is separated out because the driver harness hands us
 an externally created ``SparkSession``; every conf it sets is dynamically
 settable so we can tune sessions we did not build.
@@ -95,6 +116,21 @@ def get_spark(
     without a checkpoint and records it in the checkpoint's offset
     metadata. A restart keeps the recorded count, so existing
     checkpoints keep their width and only new ones take the new width.
+
+    Checkpoints (``spark.sql.streaming.checkpointFileManagerClass``):
+    written through the Hadoop ``FileSystem`` API, 4 spawned processes
+    per file instead of 20 through ``FileContext`` (see the module
+    docstring). This assumes
+    the checkpoint directory is local, as for every session this
+    function builds: there a temp file renamed within one directory is
+    atomic. Checksums (``.crc``, ``.delta.crc``) are kept. Measured on a
+    4-core host (perfbench, interleaved pairs), the p50 latency at
+    500 frames/s fell to 0.74x on ``ws_sharded_stateful`` (1.81 s to
+    1.33 s, 20 pairs) and the p50 latency at 5000 frames/s to 0.61x on
+    ``ws_forward`` (297 ms to 182 ms, 12 pairs); in traced runs the
+    offset-log and commit-log writes fell from about 40 ms to about
+    12 ms each and the stateful batch's state-store commit time from
+    759 ms to 35 ms.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -112,6 +148,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -40,6 +40,7 @@ map work runs N-wide with no exchange.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from collections import deque
 from dataclasses import dataclass
@@ -64,6 +65,20 @@ from pyspark.sql.types import StructType
 
 from .ws_client import RECONNECT_DELAY_S, FeedConnection
 
+log = logging.getLogger("ws_to_kafka_spark.sources")
+
+
+def _warn_if_lost(url: str, start: int, oldest: int, end: int) -> None:
+    """Log the frames of the admitted range [start, end) that retention
+    overflow evicted before the range was read: the range claims them,
+    but the batch starts at the oldest retained frame."""
+    lost = min(oldest, end) - start
+    if lost > 0:
+        log.warning(
+            "websocket feed %s: %d frames lost to retention overflow "
+            "(offsets %d-%d)", url, lost, start, start + lost - 1,
+        )
+
 # value is BINARY, not string: the reference forwards frame bytes verbatim
 # (src/main.cpp:48-50 hands the payload pointer straight to
 # kafka_producer.cpp:47-49, RK_MSG_COPY — no decode), so a non-UTF-8 binary
@@ -84,7 +99,8 @@ class _FeedWorker:
     """Retention buffer over one `FeedConnection` (dial → subscribe →
     read, redialing forever — the reference's Start() loop): numbers
     each frame, stamps its arrival time and keeps the newest
-    ``retention`` frames for the reader."""
+    ``retention`` frames for the reader. ``dropped`` counts the frames
+    retention overflow has evicted."""
 
     def __init__(
         self,
@@ -95,9 +111,11 @@ class _FeedWorker:
         reconnect_delay: float = RECONNECT_DELAY_S,
         retention: int = 100_000,
     ):
+        self._url = url
         self._buffer: deque[_Record] = deque(maxlen=retention)
         self._lock = threading.Lock()
         self._next_index = 0
+        self.dropped = 0
         self._conn = FeedConnection(
             url,
             self._append,
@@ -123,13 +141,18 @@ class _FeedWorker:
         )
         with self._lock:
             self._next_index += 1
+            if len(self._buffer) == self._buffer.maxlen:
+                self.dropped += 1  # the append evicts the oldest frame
             self._buffer.append(rec)
 
     def snapshot(self, start_index: int) -> tuple[list[_Record], int]:
         """Records with index >= start_index, plus the next offset."""
         with self._lock:
             records = [r for r in self._buffer if r.index >= start_index]
-            return records, self._next_index
+            oldest = records[0].index if records else self._next_index
+            next_index = self._next_index
+        _warn_if_lost(self._url, start_index, oldest, next_index)
+        return records, next_index
 
     def between(self, start_index: int, end_index: int) -> list[_Record]:
         with self._lock:
@@ -161,7 +184,8 @@ class _ProcFeedWorker:
     prune/jump surface `MultiWebSocketStreamReader` plans offsets from.
     Four sockets through the round-9 in-process thread design totalled
     0.93x ONE socket (GIL); per-frame work now runs N-wide in children
-    and executors."""
+    and executors. ``dropped`` counts the frames retention overflow
+    has evicted."""
 
     def __init__(self, cfg: dict, retention: int = 100_000):
         self._cfg = dict(cfg)
@@ -170,6 +194,7 @@ class _ProcFeedWorker:
         self._n_buffered = 0
         self._lock = threading.Lock()
         self._next_index = 0
+        self.dropped = 0
         self._stop = threading.Event()
         self._proc = None
         self._pump_thread: threading.Thread | None = None
@@ -261,8 +286,9 @@ class _ProcFeedWorker:
                         len(self._buffer) > 1
                         and self._n_buffered > self._retention
                     ):
-                        dropped = self._buffer.popleft()
-                        self._n_buffered -= dropped.n
+                        evicted = self._buffer.popleft()
+                        self._n_buffered -= evicted.n
+                        self.dropped += evicted.n
             # child died unexpectedly: the reference's persistent-feed
             # contract says redial forever; frame numbering continues.
             if not self._stop.is_set():
@@ -818,6 +844,7 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
                 # docstring.
                 w.jump(s)
                 e = max(e, s)
+            _warn_if_lost(self._specs[i]["url"], s, w.peek()[1], e)
             batches = (
                 [(r.index, r.n, r.body) for r in w.batches_between(s, e)]
                 if e > s
