@@ -68,3 +68,62 @@ def test_checkpoint_files_are_written_through_the_file_system_api(
         again.write(b"v2\n")
         again.close()
     assert (tmp_path / "0").read_bytes() == b"v1\n"
+
+
+def test_python_workers_run_under_the_engine_daemon(spark):
+    """``get_spark`` sessions fork Python workers from
+    ``ws_to_kafka_spark.worker_daemon``, whose ``zipimporter`` re-reads
+    an archive only when it changed (Python < 3.13; 3.13's stock method
+    is already lazy and is left in place)."""
+    import sys
+
+    def probe(batches):
+        import zipimport
+
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict(
+            {"m": [zipimport.zipimporter.invalidate_caches.__module__]}
+        )
+
+    (row,) = spark.range(1, numPartitions=1).mapInArrow(probe, "m string").collect()
+    expected = (
+        "ws_to_kafka_spark.worker_daemon"
+        if sys.version_info < (3, 13)
+        else "zipimport"
+    )
+    assert row.m == expected
+
+
+def test_python_tasks_run_from_a_foreign_cwd_without_pythonpath(tmp_path):
+    """A driver started outside the repository, with no ``PYTHONPATH``,
+    still launches the engine daemon: ``get_spark`` puts the package
+    root on the executors' ``PYTHONPATH``."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from ws_to_kafka_spark.session import get_spark
+spark = get_spark("foreign-cwd", cpus=2)
+rows = spark.range(3, numPartitions=1).mapInArrow(
+    lambda batches: batches, "id long").collect()
+assert sorted(r.id for r in rows) == [0, 1, 2], rows
+spark.stop()
+print("ok")
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.strip().endswith("ok")

@@ -2051,3 +2051,86 @@ def test_proc_feed_worker_counts_frames_lost_to_retention(monkeypatch):
     worker._pump()
     assert worker.dropped == 4
     assert worker.peek() == (6, 4)
+
+
+def test_feed_worker_counts_no_loss_for_frames_a_batch_took():
+    """Retention evicting a frame that a batch already took loses
+    nothing: the reader's ``read`` marks the taken frontier, and only
+    evictions at or above it count as ``dropped``."""
+    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
+
+    url = "ws://127.0.0.1:9/feed"  # never dialed: start() is not called
+    worker = _FeedWorker(
+        url=url,
+        subscribe=None,
+        interval_seconds=0.0,
+        interval_messages=(),
+        retention=3,
+    )
+    reader = WebSocketStreamReader({"url": url})
+    reader._worker = worker
+    for i in range(3):
+        worker._append(b"frame-%d" % i)
+    batches, end = reader.read({"index": 0})
+    assert end == {"index": 3}
+    assert sum(b.num_rows for b in batches) == 3
+
+    for i in range(3, 5):
+        worker._append(b"frame-%d" % i)  # evicts taken frames 0 and 1
+    assert worker.dropped == 0
+    worker._append(b"frame-5")  # evicts frame 2, the last one taken
+    worker._append(b"frame-6")  # evicts frame 3, never taken
+    assert worker.dropped == 1
+
+
+def test_proc_feed_worker_counts_no_loss_for_frames_a_batch_took(monkeypatch):
+    """The `websocket_multi` buffer counts only the frames of an evicted
+    child batch that lie at or above the frontier ``partitions`` took."""
+    import io
+    import struct
+
+    from ws_to_kafka_spark.sources.websocket import (
+        MultiWebSocketStreamReader,
+        _ProcFeedWorker,
+    )
+
+    url = "ws://127.0.0.1:9/feed"
+    worker = _ProcFeedWorker({"url": url, "reconnect_delay": 0.0}, retention=4)
+
+    def pump(n_batches):
+        """Run the pump over one fake child that flushes ``n_batches``
+        batches of two frames each, then exits."""
+        pipe = b"".join(
+            struct.pack("<II", 4, 2) + b"body" for _ in range(n_batches)
+        )
+
+        class FakeChild:
+            stdout = io.BytesIO(pipe)
+
+            def terminate(self):
+                pass
+
+            def wait(self, timeout=None):
+                pass
+
+        children = [FakeChild()]
+
+        def spawn():
+            if not children:  # the "respawn" after EOF ends the pump
+                worker._stop.set()
+                raise RuntimeError("stop")
+            return children.pop()
+
+        monkeypatch.setattr(worker, "_spawn", spawn)
+        worker._stop.clear()
+        worker._pump()
+
+    pump(2)  # frames [0, 4): fits in retention
+    reader = MultiWebSocketStreamReader({"url": url})
+    reader._workers = [worker]
+    (part,) = reader.partitions({"feeds": [0]}, {"feeds": [3]})
+    assert sum(n for _, n, _ in part.batches) == 4  # whole batches [0, 4)
+
+    pump(2)  # frames [4, 8): evicts batches [0, 2) and [2, 4)
+    assert worker.peek() == (8, 4)
+    assert worker.dropped == 1  # frame 3 only; 0-2 were taken

@@ -100,7 +100,8 @@ class _FeedWorker:
     read, redialing forever — the reference's Start() loop): numbers
     each frame, stamps its arrival time and keeps the newest
     ``retention`` frames for the reader. ``dropped`` counts the frames
-    retention overflow has evicted."""
+    retention overflow evicted before a batch took them (see
+    ``mark_taken``)."""
 
     def __init__(
         self,
@@ -115,6 +116,7 @@ class _FeedWorker:
         self._buffer: deque[_Record] = deque(maxlen=retention)
         self._lock = threading.Lock()
         self._next_index = 0
+        self._taken = 0
         self.dropped = 0
         self._conn = FeedConnection(
             url,
@@ -141,9 +143,18 @@ class _FeedWorker:
         )
         with self._lock:
             self._next_index += 1
-            if len(self._buffer) == self._buffer.maxlen:
-                self.dropped += 1  # the append evicts the oldest frame
+            if (
+                len(self._buffer) == self._buffer.maxlen
+                and self._buffer[0].index >= self._taken
+            ):
+                self.dropped += 1  # the append evicts an untaken frame
             self._buffer.append(rec)
+
+    def mark_taken(self, end_index: int) -> None:
+        """A batch took every frame below ``end_index``: evicting those
+        later loses nothing."""
+        with self._lock:
+            self._taken = max(self._taken, end_index)
 
     def snapshot(self, start_index: int) -> tuple[list[_Record], int]:
         """Records with index >= start_index, plus the next offset."""
@@ -185,7 +196,7 @@ class _ProcFeedWorker:
     Four sockets through the round-9 in-process thread design totalled
     0.93x ONE socket (GIL); per-frame work now runs N-wide in children
     and executors. ``dropped`` counts the frames retention overflow
-    has evicted."""
+    evicted before a batch took them (see ``mark_taken``)."""
 
     def __init__(self, cfg: dict, retention: int = 100_000):
         self._cfg = dict(cfg)
@@ -194,6 +205,7 @@ class _ProcFeedWorker:
         self._n_buffered = 0
         self._lock = threading.Lock()
         self._next_index = 0
+        self._taken = 0
         self.dropped = 0
         self._stop = threading.Event()
         self._proc = None
@@ -288,7 +300,10 @@ class _ProcFeedWorker:
                     ):
                         evicted = self._buffer.popleft()
                         self._n_buffered -= evicted.n
-                        self.dropped += evicted.n
+                        # only its frames at or above the taken frontier
+                        end = evicted.index + evicted.n
+                        if end > self._taken:
+                            self.dropped += end - max(evicted.index, self._taken)
             # child died unexpectedly: the reference's persistent-feed
             # contract says redial forever; frame numbering continues.
             if not self._stop.is_set():
@@ -317,6 +332,12 @@ class _ProcFeedWorker:
         with self._lock:
             lo = self._buffer[0].index if self._buffer else self._next_index
             return self._next_index, lo
+
+    def mark_taken(self, end_index: int) -> None:
+        """A batch took every frame below ``end_index``: evicting those
+        later loses nothing."""
+        with self._lock:
+            self._taken = max(self._taken, end_index)
 
     def batches_between(self, start: int, end: int) -> list[_BatchRec]:
         with self._lock:
@@ -464,6 +485,7 @@ class WebSocketStreamReader(SimpleDataSourceStreamReader):
         if cap > 0 and len(records) > cap:
             records = records[:cap]
             next_index = records[-1].index + 1
+        self._worker.mark_taken(next_index)
         if not records:
             return iter(()), {"index": next_index}
         # Deliver as pyarrow RecordBatches, not per-row tuples (round-12
@@ -850,6 +872,7 @@ class MultiWebSocketStreamReader(DataSourceStreamReader):
                 if e > s
                 else []
             )
+            w.mark_taken(e)
             parts.append(_FeedBlobSlice(i, s, e, batches))
         return parts
 
