@@ -12,7 +12,9 @@ Reference behaviors asserted: subscribe message sent on (re)connect
 from __future__ import annotations
 
 import json
+import struct
 import time
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -1246,10 +1248,10 @@ def test_max_records_per_batch_caps_microbatches(spark, tmp_path):
 def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path):
     """Two independent ws servers through one `websocket_multi` stream:
     every frame from BOTH feeds must land tagged with its feed_id, each
-    feed's frames must arrive in per-feed connection order, and each
-    (batch, feed) slice must occupy its own input partition — the
-    N-sockets ⇒ N-partitions claim (round-8 VERDICT item 2), with
-    subprocess decode and blob slices unpacked executor-side."""
+    feed's frames must arrive in per-feed connection order, and every
+    batch — both feeds together — must arrive as the ONE input
+    partition the driver's source runner prefetched (subprocess decode,
+    packed batches unpacked on the driver, no executor Python task)."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -1304,20 +1306,17 @@ def test_websocket_multi_two_feeds_land_in_order(spark, tmp_path):
         by_feed[feed].append(value)
     assert by_feed[0] == frames_a, "feed 0 lost frames or broke order"
     assert by_feed[1] == frames_b, "feed 1 lost frames or broke order"
-    # partition isolation: within any batch, the two feeds never share a
-    # spark partition, and at least one batch carried both feeds in
-    # parallel partitions
-    parts: dict[tuple[int, int], set[int]] = {}
+    # one prefetched partition: every row of a batch, whatever its
+    # feed, sits in the batch's single input partition, and at least
+    # one batch carried both feeds
+    parts: dict[int, set[int]] = {}
+    feeds: dict[int, set[int]] = {}
     for batch, feed, _value, part in seen:
-        parts.setdefault((batch, feed), set()).add(part)
-    assert all(len(p) == 1 for p in parts.values())
-    both = [
-        b
-        for b in {batch for batch, _ in parts}
-        if (b, 0) in parts and (b, 1) in parts
-    ]
-    assert any(parts[(b, 0)] != parts[(b, 1)] for b in both), (
-        "feeds never ran in distinct input partitions"
+        parts.setdefault(batch, set()).add(part)
+        feeds.setdefault(batch, set()).add(feed)
+    assert all(p == {0} for p in parts.values()), parts
+    assert any(f == {0, 1} for f in feeds.values()), (
+        "no batch carried both feeds"
     )
 
 
@@ -1644,6 +1643,10 @@ def test_transform_with_state_checkpoint_restart(spark, tmp_path):
             assert wait_until(
                 lambda: latest == {0: (2, 4.0), 1: (1, 2.0)}, timeout=60
             ), f"phase A never landed: {latest}"
+            # the sink runs before the batch commits: a stop in between
+            # replays phase A's batch on restart, and the at-most-once
+            # source cannot serve a replay, which is not what this tests
+            query.processAllAvailable()
         finally:
             query.stop()
 
@@ -1737,16 +1740,44 @@ def test_streaming_dedup_checkpoint_restart(spark, tmp_path):
         server.close()
 
 
-def test_feed_blob_slice_micros_exact_round_trip():
-    """ADVICE r10 receipt: process-mode ws_timestamp must be bit-exact
-    to the child-recorded integer micros. The old float path
-    (fromtimestamp(ts_us / 1e6)) has ~0.5 µs ulp at current epochs, so
-    odd-microsecond values near 1.7e9 s could come back one µs off; the
-    integer-timedelta conversion cannot."""
-    import struct
-    from datetime import timedelta, timezone
+_EPOCH_UTC = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
-    from ws_to_kafka_spark.sources.websocket import _EPOCH_UTC, _FeedBlobSlice
+
+def _rows_iter(batches, start, end):
+    """Reference unpack of the feed_proc wire format, one frame at a time
+    with ``struct``: ``(payload, UTC datetime, ts_us)`` for each frame
+    numbered in [start, end) of ``[(first_index, n_frames, body), ...]``.
+    The datetime comes from integer-exact ``timedelta`` arithmetic."""
+    for first, n, body in batches:
+        off = 0
+        for idx in range(first, first + n):
+            ts_us, ln = struct.unpack_from("<QI", body, off)
+            off += 12
+            if start <= idx < end:
+                yield (
+                    body[off:off + ln],
+                    _EPOCH_UTC + timedelta(microseconds=ts_us),
+                    ts_us,
+                )
+            off += ln
+
+
+def _unpack(batches, feed_id, start, end):
+    from ws_to_kafka_spark.sources.websocket import _BatchRec, _unpack_frames
+
+    return _unpack_frames(
+        [_BatchRec(*b) for b in batches], feed_id, start, end
+    )
+
+
+def test_feed_blob_slice_micros_exact_round_trip():
+    """Exactness pin: websocket_multi's ws_timestamp must be
+    bit-exact to the child-recorded integer micros. A float path
+    (fromtimestamp(ts_us / 1e6)) has ~0.5 µs ulp at current epochs, so
+    odd-microsecond values near 1.7e9 s could come back one µs off;
+    ``_unpack_frames`` moves the int64 micros into the Arrow column
+    untouched, and the reference walk's integer timedelta cannot drift."""
+    import pyarrow as pa
 
     # sweep precision-critical values: odd micros around the float64
     # 0.5 µs-ulp regime, plus epoch boundaries
@@ -1760,14 +1791,15 @@ def test_feed_blob_slice_micros_exact_round_trip():
     body = b"".join(
         struct.pack("<QI", ts, 1) + b"x" for ts in ts_values
     )
-    part = _FeedBlobSlice(
-        feed_id=0, start=0, end=len(ts_values),
-        batches=[(0, len(ts_values), body)],
-    )
-    got = [row[1] for row in part.rows_iter()]
-    for ts_us, dt in zip(ts_values, got):
-        assert dt.tzinfo == timezone.utc
-        assert dt == _EPOCH_UTC + timedelta(microseconds=ts_us)
+    batches = [(0, len(ts_values), body)]
+    ref = [row[1] for row in _rows_iter(batches, 0, len(ts_values))]
+    (got,) = _unpack(batches, 0, 0, len(ts_values))
+    col = got.column("ws_timestamp")
+    assert col.type.tz == "UTC"
+    assert col.cast(pa.int64()).to_pylist() == ts_values
+    for ts_us, dt, dt_ref in zip(ts_values, col.to_pylist(), ref):
+        assert dt.utcoffset() == timedelta(0)
+        assert dt == dt_ref == _EPOCH_UTC + timedelta(microseconds=ts_us)
         # and the round-trip back to integer micros is lossless
         assert (
             (dt - _EPOCH_UTC) // timedelta(microseconds=1) == ts_us
@@ -1775,18 +1807,13 @@ def test_feed_blob_slice_micros_exact_round_trip():
 
 
 def test_feed_blob_slice_vectorized_batches_match_rows_iter():
-    """Round-13 pin: the numpy/from_buffers vectorized ``batches_iter``
-    (70k -> ~700k frames/s/core in isolation — the executor-path
-    bottleneck VERDICT r12 item 1 pointed at) must stay bit-identical
-    to ``rows_iter`` — values, exact integer-micro timestamps, feed_id —
-    including on PARTIAL slices (start/end interior to a packed batch),
-    multi-batch partitions, and batches whose selected range is empty."""
-    import struct
-    from datetime import timedelta, timezone
-
+    """Pin: the numpy/from_buffers vectorized ``_unpack_frames``
+    (70k -> ~700k frames/s/core in isolation) must stay bit-identical
+    to the per-frame reference walk ``_rows_iter`` — values, exact
+    integer-micro timestamps, feed_id — including on PARTIAL windows
+    (start/end interior to a packed batch), multi-batch windows, and
+    batches whose selected range is empty."""
     import pyarrow as pa
-
-    from ws_to_kafka_spark.sources.websocket import _EPOCH_UTC, _FeedBlobSlice
 
     def pack(ts_len_pairs):
         return b"".join(
@@ -1803,40 +1830,39 @@ def test_feed_blob_slice_vectorized_batches_match_rows_iter():
     batches = [(0, 40, pack(frames_a)), (40, 25, pack(frames_b))]
     all_ts = [ts for ts, _ in frames_a] + [ts for ts, _ in frames_b]
     for start, end in [(0, 65), (7, 52), (40, 65), (0, 40), (41, 41)]:
-        part = _FeedBlobSlice(feed_id=2, start=start, end=end, batches=batches)
-        ref = list(part.rows_iter())
-        got = list(part.batches_iter())
+        ref = list(_rows_iter(batches, start, end))
+        got = _unpack(batches, 2, start, end)
         if not ref:
             assert got == []
             continue
         tbl = pa.Table.from_batches(got)
         assert tbl.num_rows == len(ref)
-        for (v0, dt0, f0), v1, t1, f1, ts_us in zip(
+        for (v0, dt0, _), v1, t1, f1, ts_us in zip(
             ref,
             tbl.column("value").to_pylist(),
             tbl.column("ws_timestamp").to_pylist(),
             tbl.column("feed_id").to_pylist(),
             all_ts[start:end],
         ):
-            assert v0 == v1 and f0 == f1
+            assert v0 == v1 and f1 == 2
             dt1 = t1 if t1.tzinfo else t1.replace(tzinfo=timezone.utc)
             assert dt0 == dt1
-            # lossless back to integer micros (the ADVICE-r10 pin):
+            # lossless back to integer micros (the exactness pin):
             # the round-tripped micros must equal the PACKED wire value
             # (the old `.total_seconds() is not None` was vacuous)
             assert (dt1 - _EPOCH_UTC) // timedelta(microseconds=1) == ts_us
 
 
 def test_feed_blob_slice_offset_bound_enforced(monkeypatch):
-    """VERDICT r13 item 8: ``batches_iter`` packs payloads behind int32
+    """Bound pin: ``_unpack_frames`` packs payloads behind int32
     Arrow binary offsets; a batch whose SELECTED payload total exceeds
     2 GiB used to silently wrap ``offsets.astype(np.int32)`` into a
-    corrupt column. The bound is now enforced loudly. The module bound
-    is injected scaled-down so the test runs on bytes, not gigabytes."""
-    import struct
+    corrupt column. The bound is enforced loudly, before the gather
+    index is built. The module bound is injected scaled-down so the
+    test runs on bytes, not gigabytes."""
+    import numpy as np
 
     from ws_to_kafka_spark.sources import websocket as ws_mod
-    from ws_to_kafka_spark.sources.websocket import _FeedBlobSlice
 
     def pack(payloads):
         return b"".join(
@@ -1845,16 +1871,21 @@ def test_feed_blob_slice_offset_bound_enforced(monkeypatch):
         )
 
     payloads = [b"abc", b"defg", b"hi"]  # selected total = 9 bytes
-    part = _FeedBlobSlice(
-        feed_id=0, start=0, end=3, batches=[(0, 3, pack(payloads))]
-    )
+    batches = [(0, 3, pack(payloads))]
     monkeypatch.setattr(ws_mod, "_BIN_OFFSET_MAX", 8)
+    gathers = []
+    real_repeat = np.repeat
+    monkeypatch.setattr(
+        np, "repeat", lambda *a, **k: gathers.append(1) or real_repeat(*a, **k)
+    )
     with pytest.raises(ValueError, match="offset bound"):
-        list(part.batches_iter())
+        _unpack(batches, 0, 0, 3)
+    assert not gathers, "the gather index was built before the raise"
     # exactly AT the bound is fine (offsets fit), and values are intact
     monkeypatch.setattr(ws_mod, "_BIN_OFFSET_MAX", 9)
-    got = list(part.batches_iter())
+    got = _unpack(batches, 0, 0, 3)
     assert [v.as_py() for b in got for v in b.column(0)] == payloads
+    assert [r[0] for r in _rows_iter(batches, 0, 3)] == payloads
 
 
 def test_feed_proc_pack_frames_bit_identical():
@@ -1862,13 +1893,11 @@ def test_feed_proc_pack_frames_bit_identical():
     packing (``feed_proc.pack_frames`` — numpy structured headers + one
     C-level join) must produce the BYTE-IDENTICAL wire body as the old
     per-frame ``struct.pack("<QI", ts, len) + payload`` loop, on both
-    sides of the small-batch dispatch threshold, and the executor's
-    ``_FeedBlobSlice`` must round-trip it losslessly."""
-    import struct
-    from datetime import timedelta
+    sides of the small-batch dispatch threshold, and the reader's
+    ``_unpack_frames`` must round-trip it losslessly."""
+    import pyarrow as pa
 
     from ws_to_kafka_spark.sources import feed_proc
-    from ws_to_kafka_spark.sources.websocket import _EPOCH_UTC, _FeedBlobSlice
 
     def reference(frames):
         return b"".join(
@@ -1893,16 +1922,15 @@ def test_feed_proc_pack_frames_bit_identical():
         got = feed_proc.pack_frames(list(frames))
         assert got == reference(frames), name
         if frames:
-            part = _FeedBlobSlice(
-                feed_id=1, start=0, end=len(frames),
-                batches=[(0, len(frames), got)],
-            )
-            rows = list(part.rows_iter())
+            batches = [(0, len(frames), got)]
+            rows = list(_rows_iter(batches, 0, len(frames)))
             assert [r[0] for r in rows] == [p for _, p in frames], name
-            assert [
-                (r[1] - _EPOCH_UTC) // timedelta(microseconds=1)
-                for r in rows
-            ] == [ts for ts, _ in frames], name
+            assert [r[2] for r in rows] == [ts for ts, _ in frames], name
+            tbl = pa.Table.from_batches(_unpack(batches, 1, 0, len(frames)))
+            assert tbl.column("value").to_pylist() == [p for _, p in frames]
+            assert tbl.column("ws_timestamp").cast(pa.int64()).to_pylist() == [
+                ts for ts, _ in frames
+            ], name
 
 
 def test_feed_proc_reader_survives_non_wserror(monkeypatch):
@@ -2083,54 +2111,223 @@ def test_feed_worker_counts_no_loss_for_frames_a_batch_took():
     assert worker.dropped == 1
 
 
-def test_proc_feed_worker_counts_no_loss_for_frames_a_batch_took(monkeypatch):
-    """The `websocket_multi` buffer counts only the frames of an evicted
-    child batch that lie at or above the frontier ``partitions`` took."""
+def _pump_fake_child(worker, monkeypatch, n_batches, per_batch=2):
+    """Run ``worker``'s pump over one fake feed child that flushes
+    ``n_batches`` packed batches of ``per_batch`` real frames each, then
+    exits (the pump's respawn attempt ends it)."""
     import io
-    import struct
 
-    from ws_to_kafka_spark.sources.websocket import (
-        MultiWebSocketStreamReader,
-        _ProcFeedWorker,
+    from ws_to_kafka_spark.sources import feed_proc
+
+    bodies = [
+        feed_proc.pack_frames(
+            [(1_700_000_000_000_000 + j, b"f%d" % j) for j in range(per_batch)]
+        )
+        for _ in range(n_batches)
+    ]
+    pipe = b"".join(struct.pack("<II", len(b), per_batch) + b for b in bodies)
+
+    class FakeChild:
+        stdout = io.BytesIO(pipe)
+
+        def terminate(self):
+            pass
+
+        def wait(self, timeout=None):
+            pass
+
+    children = [FakeChild()]
+
+    def spawn():
+        if not children:  # the "respawn" after EOF ends the pump
+            worker._stop.set()
+            raise RuntimeError("stop")
+        return children.pop()
+
+    monkeypatch.setattr(worker, "_spawn", spawn)
+    worker._stop.clear()
+    worker._pump()
+
+
+def _multi_reader(workers, **options):
+    """A `websocket_multi` engine reader over pre-built feed buffers."""
+    from ws_to_kafka_spark.sources.websocket import MultiWebSocketStreamReader
+
+    urls = [w._cfg["url"] for w in workers]
+    reader = MultiWebSocketStreamReader(
+        {"urls": json.dumps(urls), **{k: str(v) for k, v in options.items()}}
+    )
+    reader.simple_reader._workers = list(workers)
+    return reader
+
+
+def _proc_worker(retention=100_000, port=9):
+    from ws_to_kafka_spark.sources.websocket import _ProcFeedWorker
+
+    return _ProcFeedWorker(
+        {"url": f"ws://127.0.0.1:{port}/feed", "reconnect_delay": 0.0},
+        retention=retention,
     )
 
-    url = "ws://127.0.0.1:9/feed"
-    worker = _ProcFeedWorker({"url": url, "reconnect_delay": 0.0}, retention=4)
 
-    def pump(n_batches):
-        """Run the pump over one fake child that flushes ``n_batches``
-        batches of two frames each, then exits."""
-        pipe = b"".join(
-            struct.pack("<II", 4, 2) + b"body" for _ in range(n_batches)
-        )
+def test_proc_feed_worker_counts_no_loss_for_frames_a_batch_took(monkeypatch):
+    """The `websocket_multi` buffer counts only the frames of an evicted
+    child batch that lie at or above the frontier ``read`` took."""
+    worker = _proc_worker(retention=4)
+    _pump_fake_child(worker, monkeypatch, 2)  # frames [0, 4): fits
+    reader = _multi_reader([worker], max_records_per_batch=3)
+    batches, end = reader.simple_reader.read({"feeds": [0]})
+    assert end == {"feeds": [3]}
+    assert sum(b.num_rows for b in batches) == 3  # frames [0, 3) taken
 
-        class FakeChild:
-            stdout = io.BytesIO(pipe)
-
-            def terminate(self):
-                pass
-
-            def wait(self, timeout=None):
-                pass
-
-        children = [FakeChild()]
-
-        def spawn():
-            if not children:  # the "respawn" after EOF ends the pump
-                worker._stop.set()
-                raise RuntimeError("stop")
-            return children.pop()
-
-        monkeypatch.setattr(worker, "_spawn", spawn)
-        worker._stop.clear()
-        worker._pump()
-
-    pump(2)  # frames [0, 4): fits in retention
-    reader = MultiWebSocketStreamReader({"url": url})
-    reader._workers = [worker]
-    (part,) = reader.partitions({"feeds": [0]}, {"feeds": [3]})
-    assert sum(n for _, n, _ in part.batches) == 4  # whole batches [0, 4)
-
-    pump(2)  # frames [4, 8): evicts batches [0, 2) and [2, 4)
+    _pump_fake_child(worker, monkeypatch, 2)  # [4, 8): evicts [0, 2), [2, 4)
     assert worker.peek() == (8, 4)
     assert worker.dropped == 1  # frame 3 only; 0-2 were taken
+
+
+def test_websocket_multi_resume_jumps_fresh_feeds_to_the_offset(monkeypatch):
+    """Checkpoint restart: the engine hands a fresh reader the resumed
+    offset (``setLatestSeenOffset`` plans the empty range end..end),
+    and the first ``latestOffset`` reads from it. Each fresh feed must
+    jump to its own start, so frames after the restart are numbered
+    from there, not from 0 (which the engine would treat as consumed)."""
+    feeds = [_proc_worker(port=9), _proc_worker(port=10)]
+    reader = _multi_reader(feeds)
+    resumed = {"feeds": [5, 7]}
+    reader.partitions(resumed, resumed)
+    assert reader.latestOffset() == resumed  # nothing new yet
+    assert [w.peek() for w in feeds] == [(5, 5), (7, 7)]
+
+    _pump_fake_child(feeds[0], monkeypatch, 1)
+    _pump_fake_child(feeds[1], monkeypatch, 2)
+    assert reader.latestOffset() == {"feeds": [7, 11]}
+    rows = [
+        (r["feed_id"], r["value"])
+        for b in reader.getCache(resumed, {"feeds": [7, 11]})
+        for r in b.to_pylist()
+    ]
+    assert rows == [(0, b"f0"), (0, b"f1")] + [(1, b"f0"), (1, b"f1")] * 2
+
+
+def test_websocket_multi_capped_read_windows_from_the_oldest_frame(
+    monkeypatch, caplog
+):
+    """The per-feed cap windows from max(start, oldest retained frame):
+    a start that retention overflow has passed admits ``cap`` frames
+    from the oldest one left (and warns about the gap), never ``cap``
+    frames from the lost start."""
+    worker = _proc_worker(retention=4)
+    _pump_fake_child(worker, monkeypatch, 4)  # [0, 8); [4, 8) retained
+    assert worker.peek() == (8, 4)
+    reader = _multi_reader([worker], max_records_per_batch=3).simple_reader
+
+    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        batches, end = reader.read({"feeds": [0]})
+    assert end == {"feeds": [7]}  # frames 4, 5, 6
+    assert [r["value"] for b in batches for r in b.to_pylist()] == [
+        b"f0", b"f1", b"f0"
+    ]
+    (warning,) = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert "4 frames lost" in warning.getMessage()
+
+    _, end = reader.read({"feeds": [5]})  # past the gap: from the start
+    assert end == {"feeds": [8]}
+
+
+def test_websocket_readbetween_without_a_feed_warns_of_the_lost_frames(caplog):
+    """A replayed batch served by a reader with no live feed (an executor
+    copy, or a restart replay) runs empty; the frames it could not serve
+    are logged, never silent."""
+    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
+
+    url = "ws://127.0.0.1:9/feed"
+    reader = WebSocketStreamReader({"url": url})
+    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        assert list(reader.readBetweenOffsets({"index": 3}, {"index": 10})) == []
+        assert list(reader.readBetweenOffsets({"index": 10}, {"index": 10})) == []
+    (warning,) = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert url in warning.getMessage()
+    assert "7 frames" in warning.getMessage()
+
+
+def test_websocket_multi_readbetween_without_a_feed_warns_of_the_lost_frames(
+    caplog,
+):
+    """The executor path of `websocket_multi`: the wrapper's
+    ``read(partition)`` replays through ``readBetweenOffsets`` on a
+    reader that never started its feeds, so the batch is lost — one
+    WARNING names the feeds and the frames."""
+    from pyspark.sql.datasource_internal import SimpleInputPartition
+
+    from ws_to_kafka_spark.sources.websocket import MultiWebSocketStreamReader
+
+    urls = ["ws://127.0.0.1:9/a", "ws://127.0.0.1:9/b", "ws://127.0.0.1:9/c"]
+    reader = MultiWebSocketStreamReader({"urls": json.dumps(urls)})
+    part = SimpleInputPartition({"feeds": [2, 4, 6]}, {"feeds": [5, 4, 10]})
+    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        assert list(reader.read(part)) == []
+    (warning,) = [r for r in caplog.records if r.levelname == "WARNING"]
+    msg = warning.getMessage()
+    assert urls[0] in msg and urls[2] in msg and urls[1] not in msg
+    assert "7 frames" in msg
+    assert reader.simple_reader._workers is None  # no feed was started
+
+
+def test_websocket_multi_source_runner_sends_arrow_batches_to_the_jvm(
+    monkeypatch,
+):
+    """Regression guard for the prefetch path: Spark's source runner must
+    answer a planned `websocket_multi` batch with the prefetched Arrow
+    batches (``NON_EMPTY_PYARROW_RECORD_BATCHES``), so the JVM block
+    store serves the batch and no executor Python task runs. A reader
+    that is not a ``_SimpleStreamReaderWrapper`` gets
+    ``PREFETCHED_RECORDS_NOT_FOUND`` and sends every batch back to
+    executor Python workers."""
+    import io
+
+    import pyarrow as pa
+    from pyspark.serializers import read_int, write_with_length
+    from pyspark.sql.datasource_internal import _streamReader
+    from pyspark.sql.streaming import python_streaming_source_runner as runner
+    from pyspark.sql.types import (
+        BinaryType,
+        IntegerType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from ws_to_kafka_spark.sources.websocket import MultiWebSocketDataSource
+
+    worker = _proc_worker()
+    _pump_fake_child(worker, monkeypatch, 3)  # frames [0, 6)
+    source = MultiWebSocketDataSource(
+        {"urls": json.dumps([worker._cfg["url"]])}
+    )
+    schema = StructType(
+        [
+            StructField("value", BinaryType()),
+            StructField("ws_timestamp", TimestampType()),
+            StructField("feed_id", IntegerType()),
+        ]
+    )
+    reader = _streamReader(source, schema)
+    reader.simple_reader._workers = [worker]
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    assert end == {"feeds": [6]}
+
+    infile, outfile = io.BytesIO(), io.BytesIO()
+    for offset in (start, end):
+        write_with_length(json.dumps(offset).encode("utf-8"), infile)
+    infile.seek(0)
+    runner.partitions_func(reader, source, schema, 10_000, infile, outfile)
+
+    outfile.seek(0)
+    assert read_int(outfile) == 1  # one input partition
+    outfile.read(read_int(outfile))  # its pickled bytes
+    assert read_int(outfile) == runner.NON_EMPTY_PYARROW_RECORD_BATCHES
+    read_int(outfile)  # START_ARROW_STREAM
+    table = pa.ipc.open_stream(outfile).read_all()
+    assert table.column("value").to_pylist() == [b"f0", b"f1"] * 3
+    assert table.column("feed_id").to_pylist() == [0] * 6

@@ -18,8 +18,9 @@ The connection itself — dial -> subscribe -> read -> redial with backoff,
 drift-free interval resends — is ``ws_client.FeedConnection``, the one
 loop every reader in this package shares; this child adds only its
 per-frame step (timestamp and enqueue) and the pending list's flush
-loop. The parent side (`websocket.py`) only moves opaque byte batches,
-and executors unpack frames in parallel.
+loop. The parent side (`websocket.py`) only moves opaque byte batches
+off the pipe; the reader unpacks them, one packed batch at a time with
+vectorized code, in Spark's driver-side source runner.
 
 The module imports no pyspark (``ws_client`` is stdlib-only), so the
 child starts in tens of milliseconds.
@@ -55,10 +56,10 @@ def pack_frames(frames: list) -> bytes:
 
     Round 14 (VERDICT r13 item 2): the per-frame ``struct.pack + b"..."
     concat`` in the READER thread capped the child at ~205k frames/s —
-    the multi-socket bottleneck once the executor unpack went ~10x.
+    the multi-socket bottleneck once the reader's unpack went ~10x.
     Packing now happens at FLUSH time over the whole batch: the 12-byte
     headers come out of ONE numpy structured-array ``tobytes`` (the
-    same buffer-arithmetic family as ``_FeedBlobSlice.batches_iter``,
+    same buffer-arithmetic family as ``websocket._unpack_frames``,
     guide §4.2) and the interleave [hdr0, p0, hdr1, p1, ...] is ONE
     C-level ``bytes.join`` — per frame the Python interpreter touches
     two list slots and a memoryview slice, not a pack call and a
