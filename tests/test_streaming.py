@@ -17,11 +17,18 @@ import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from tests.ws_server import RecordingWsServer
 from ws_to_kafka_spark.config import PipelineConfig
 from ws_to_kafka_spark.sources.ws_client import WsClient
-from ws_to_kafka_spark.sources.websocket import _FeedWorker
+from ws_to_kafka_spark.sources.websocket import _FeedWorker, _ProcFeedWorker
 from ws_to_kafka_spark.streaming import start_pipeline
 from ws_to_kafka_spark.streaming.observability import PipelineListener
 
@@ -33,6 +40,13 @@ def wait_until(cond, timeout=15.0, step=0.1):
             return True
         time.sleep(step)
     return False
+
+
+def _buffered(worker) -> list[bytes]:
+    """The payloads a feed owner retains, oldest first."""
+    nxt, oldest = worker.peek()
+    batches = worker.batches(oldest, nxt)
+    return [v for b in batches for v in b.column("value").to_pylist()]
 
 
 # ---------------------------------------------------------------------------
@@ -136,11 +150,8 @@ def test_feed_worker_reconnects_and_resubscribes():
         frames_per_connection=[b"a", b"b"], drop_after_frames=1
     )
     worker = _FeedWorker(
-        url=server.url,
-        subscribe="SUB",
-        interval_seconds=0.0,
-        interval_messages=(),
-        reconnect_delay=0.2,  # keep the test fast; production default is 5 s
+        # keep the test fast; production default reconnect_delay is 5 s
+        {"url": server.url, "subscribe": "SUB", "reconnect_delay": 0.2}
     )
     try:
         worker.start()
@@ -157,7 +168,7 @@ def test_feed_worker_reconnects_and_resubscribes():
         # unread bytes) — that loss is the documented at-most-once window
         # (reference drops frames during reconnect too, wsclient.hpp:158-162).
         assert wait_until(
-            lambda: [r.value for r in worker.snapshot(0)[0]][-2:] == [b"a", b"b"]
+            lambda: _buffered(worker)[-2:] == [b"a", b"b"]
         )
     finally:
         worker.stop()
@@ -171,16 +182,14 @@ def test_idle_feed_stays_connected():
     src/wsclient.hpp:20,141-142). A regression here duplicates every
     frame on idle streams via redial."""
     server = RecordingWsServer(frames_per_connection=[b"early"])
-    worker = _FeedWorker(
-        url=server.url, subscribe=None, interval_seconds=0.0, interval_messages=()
-    )
+    worker = _FeedWorker({"url": server.url})
     try:
         worker.start()
-        assert wait_until(lambda: len(worker.snapshot(0)[0]) == 1)
+        assert wait_until(lambda: len(_buffered(worker)) == 1)
         time.sleep(12)  # cross the idle-timeout boundary
         server.push_frame(b"late")
         assert wait_until(
-            lambda: [r.value for r in worker.snapshot(0)[0]] == [b"early", b"late"]
+            lambda: _buffered(worker) == [b"early", b"late"]
         ), "late frame lost or duplicated after idle interval"
         assert server.connections == 1, "client redialed a healthy idle feed"
     finally:
@@ -191,10 +200,7 @@ def test_idle_feed_stays_connected():
 def test_interval_messages_resent_periodically():
     server = RecordingWsServer()
     worker = _FeedWorker(
-        url=server.url,
-        subscribe=None,
-        interval_seconds=0.15,
-        interval_messages=("T1", "T2"),
+        {"url": server.url, "interval": 0.15, "interval_messages": ("T1", "T2")}
     )
     try:
         worker.start()
@@ -443,6 +449,86 @@ def test_checkpoint_restart_resumes(spark, tmp_path):
         assert sum(1 for v in values if b'"run":2' in v) == 2
     finally:
         query2.stop()
+        server.close()
+
+
+def test_websocket_resumes_a_checkpoint_with_the_index_offset(spark, tmp_path):
+    """A checkpoint whose source offset has the shape the one-feed
+    ``websocket`` source wrote before both sources shared one reader
+    (``{"index": n}``) still resumes: the restarted query runs with no
+    error, and its new frames land in batches whose offsets start at n
+    or later."""
+    from ws_to_kafka_spark.sources.websocket import register_websocket_source
+
+    # frames are pushed explicitly: the recording server would replay a
+    # frames_per_connection script to EACH connection
+    server = RecordingWsServer(frames_per_connection=[])
+    ckpt = tmp_path / "ckpt"
+    seen: list[bytes] = []
+
+    def sink(df, _batch_id):
+        seen.extend(bytes(r.value) for r in df.collect())
+
+    def start(name):
+        register_websocket_source(spark)
+        return (
+            spark.readStream.format("websocket").option("url", server.url).load()
+            .writeStream.foreachBatch(sink)
+            .queryName(name)
+            .option("checkpointLocation", str(ckpt))
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+
+    def offset(o):
+        o = json.loads(o) if isinstance(o, str) else o
+        return o["feeds"][0] if "feeds" in o else o["index"]
+
+    try:
+        query = start("index_offset_1")
+        try:
+            assert wait_until(lambda: server.connections >= 1, timeout=30)
+            for i in range(3):
+                server.push_frame(b"a-%d" % i)
+            assert wait_until(lambda: len(seen) >= 3, timeout=60), seen
+            query.processAllAvailable()
+        finally:
+            query.stop()
+
+        # the last offset-log entry's source offset, in the old shape
+        log_dir = ckpt / "offsets"
+        last = max(
+            (f for f in log_dir.iterdir() if f.name.isdigit()),
+            key=lambda f: int(f.name),
+        )
+        lines = last.read_text().splitlines()
+        n = json.loads(lines[-1])["feeds"][0]
+        assert n == 3
+        lines[-1] = json.dumps({"index": n})
+        last.write_text("\n".join(lines))
+        (log_dir / f".{last.name}.crc").unlink(missing_ok=True)
+
+        query2 = start("index_offset_2")
+        try:
+            assert wait_until(lambda: server.connections >= 2, timeout=30)
+            for i in range(2):
+                server.push_frame(b"b-%d" % i)
+            assert wait_until(lambda: len(seen) >= 5, timeout=60), seen
+            query2.processAllAvailable()
+            progress = [json.loads(p.json) for p in query2.recentProgress]
+            landed = [p for p in progress if p["numInputRows"] > 0]
+        finally:
+            query2.stop()
+        assert seen == [b"a-0", b"a-1", b"a-2", b"b-0", b"b-1"]
+        assert sum(p["numInputRows"] for p in landed) == 2
+        for p in landed:
+            src = p["sources"][0]
+            assert offset(src["startOffset"]) >= n, src
+            assert (
+                offset(src["endOffset"]) - offset(src["startOffset"])
+                == p["numInputRows"]
+            ), src
+    finally:
         server.close()
 
 
@@ -1422,9 +1508,8 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
     persistent-feed contract, wsclient.hpp:132-168 redial semantics,
     now at process granularity), the fresh connection must re-receive
     the server's frames, and frame NUMBERING must continue (no offset
-    regression for the engine)."""
-    import json as _json
-
+    regression for the engine). Two feeds (``fan_out`` 2): one feed is
+    read in-process and has no child."""
     from ws_to_kafka_spark.sources.websocket import (
         register_websocket_multi_source,
     )
@@ -1434,7 +1519,8 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
     register_websocket_multi_source(spark)
     stream = (
         spark.readStream.format("websocket_multi")
-        .option("urls", _json.dumps([server.url]))
+        .option("url", server.url)
+        .option("fan_out", "2")
         .option("reconnect_delay", "0.3")
         .load()
     )
@@ -1448,7 +1534,7 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
     try:
         assert wait_until(
             lambda: spark.sql("SELECT COUNT(*) c FROM multi_crash").first().c
-            >= len(frames),
+            >= 2 * len(frames),
             timeout=60,
         )
         # the reader lives in Spark's python-source worker process, so
@@ -1501,7 +1587,7 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
         # the same frames, so the count doubles — with CONTINUED indexes
         assert wait_until(
             lambda: spark.sql("SELECT COUNT(*) c FROM multi_crash").first().c
-            >= 2 * len(frames),
+            >= 4 * len(frames),
             timeout=60,
         ), "child did not respawn after SIGKILL"
         after = _feed_proc_pids()
@@ -1509,12 +1595,13 @@ def test_websocket_multi_child_process_crash_respawns(spark, tmp_path):
     finally:
         query.stop()
         server.close()
-    vals = [
-        bytes(r.value)
-        for r in spark.sql("SELECT value FROM multi_crash").collect()
-    ]
-    assert vals[: len(frames)] == frames
-    assert vals[len(frames): 2 * len(frames)] == frames
+    by_feed: dict[int, list[bytes]] = {}
+    for r in spark.sql("SELECT feed_id, value FROM multi_crash").collect():
+        by_feed.setdefault(r.feed_id, []).append(bytes(r.value))
+    assert set(by_feed) == {0, 1}
+    for vals in by_feed.values():
+        assert vals[: len(frames)] == frames
+        assert vals[len(frames): 2 * len(frames)] == frames
 
 
 def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
@@ -1523,8 +1610,8 @@ def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
     one child per run (the pump's pipe kept it alive and the redial
     loop never exits on its own); stop() now reaps with a kill
     fallback, the pump reaps its own last spawn, and PR_SET_PDEATHSIG
-    covers a crashed driver."""
-    import json as _json
+    covers a crashed driver. Two feeds (``fan_out`` 2): one feed is read
+    in-process and has no child."""
     import os
 
     from ws_to_kafka_spark.sources.websocket import (
@@ -1568,7 +1655,8 @@ def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
     register_websocket_multi_source(spark)
     query = (
         spark.readStream.format("websocket_multi")
-        .option("urls", _json.dumps([server.url]))
+        .option("url", server.url)
+        .option("fan_out", "2")
         .load()
         .writeStream.format("memory")
         .queryName("multi_leak")
@@ -1578,7 +1666,7 @@ def test_websocket_multi_no_child_leak_after_stop(spark, tmp_path):
     try:
         assert wait_until(
             lambda: spark.sql("SELECT COUNT(*) c FROM multi_leak").first().c
-            >= len(frames),
+            >= 2 * len(frames),
             timeout=60,
         )
         assert feed_proc_pids(), "process mode did not spawn a child"
@@ -1718,6 +1806,10 @@ def test_streaming_dedup_checkpoint_restart(spark, tmp_path):
             for i in range(4):
                 server.push_frame(mk(i))
             assert wait_until(lambda: len(seen) >= 4, timeout=60), seen
+            # the sink runs before the batch commits: a stop in between
+            # replays the batch on restart, and the at-most-once source
+            # cannot serve a replay, which is not what this tests
+            query.processAllAvailable()
         finally:
             query.stop()
         assert list((ckpt / "state" / "0").glob("*/*.delta")), (
@@ -1763,10 +1855,14 @@ def _rows_iter(batches, start, end):
 
 
 def _unpack(batches, feed_id, start, end):
-    from ws_to_kafka_spark.sources.websocket import _BatchRec, _unpack_frames
+    from ws_to_kafka_spark.sources.websocket import (
+        _BatchRec,
+        _unpack_frames,
+        _with_feed_id,
+    )
 
-    return _unpack_frames(
-        [_BatchRec(*b) for b in batches], feed_id, start, end
+    return _with_feed_id(
+        _unpack_frames([_BatchRec(*b) for b in batches], start, end), feed_id
     )
 
 
@@ -1978,13 +2074,7 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
         with lock:
             return len(pending)
 
-    worker = _FeedWorker(
-        url=url,
-        subscribe=None,
-        interval_seconds=0.0,
-        interval_messages=(),
-        reconnect_delay=0.01,
-    )
+    worker = _FeedWorker({"url": url, "reconnect_delay": 0.01})
     drivers = [
         (
             "feed_proc",
@@ -1993,7 +2083,7 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
             ),
             n_pending,
         ),
-        ("_FeedWorker", worker, lambda: len(worker.snapshot(0)[0])),
+        ("_FeedWorker", worker, lambda: len(_buffered(worker))),
     ]
     for name, feed, delivered in drivers:
         dials.clear()
@@ -2012,103 +2102,25 @@ def test_feed_proc_reader_survives_non_wserror(monkeypatch):
         assert not t.is_alive(), f"{name}: reader outlived stop()"
 
 
-def test_feed_worker_counts_frames_lost_to_retention(caplog):
-    """Retention overflow is counted, never silent: a full buffer evicts
-    its oldest frame on each append, ``dropped`` counts the evictions,
-    and a read whose admitted range starts below the oldest retained
-    frame logs one WARNING naming the feed and the frames lost."""
-    url = "ws://127.0.0.1:9/feed"  # never dialed: start() is not called
-    worker = _FeedWorker(
-        url=url,
-        subscribe=None,
-        interval_seconds=0.0,
-        interval_messages=(),
-        retention=3,
+def _owner(kind, retention=100_000, port=9):
+    """A feed owner that is never started, so never dials: the in-process
+    ``"thread"`` or the feed-child ``"proc"``."""
+    cls = _FeedWorker if kind == "thread" else _ProcFeedWorker
+    return cls(
+        {"url": f"ws://127.0.0.1:{port}/feed", "reconnect_delay": 0.0},
+        retention=retention,
     )
-    for i in range(5):
-        worker._append(b"frame-%d" % i)
-    assert worker.dropped == 2
-
-    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
-        records, next_index = worker.snapshot(0)
-    assert [r.index for r in records] == [2, 3, 4] and next_index == 5
-    warnings = [r for r in caplog.records if r.levelname == "WARNING"]
-    assert len(warnings) == 1
-    assert url in warnings[0].getMessage()
-    assert "2 frames lost" in warnings[0].getMessage()
-
-    caplog.clear()
-    worker.snapshot(2)  # a read past the gap loses nothing
-    assert not caplog.records
 
 
-def test_proc_feed_worker_counts_frames_lost_to_retention(monkeypatch):
-    """The `websocket_multi` buffer evicts whole child batches past
-    ``retention`` frames and counts every frame of each one."""
-    import io
-    import struct
-
-    from ws_to_kafka_spark.sources.websocket import _ProcFeedWorker
-
-    worker = _ProcFeedWorker(
-        {"url": "ws://127.0.0.1:9/feed", "reconnect_delay": 0.0},
-        retention=3,
-    )
-    # three child flushes of two frames each (bodies are opaque here)
-    pipe = b"".join(struct.pack("<II", 4, 2) + b"body" for _ in range(3))
-
-    class FakeChild:
-        stdout = io.BytesIO(pipe)
-
-        def terminate(self):
-            pass
-
-        def wait(self, timeout=None):
-            pass
-
-    spawns = []
-
-    def spawn():
-        spawns.append(1)
-        if len(spawns) > 1:  # the "respawn" after EOF ends the pump
-            worker._stop.set()
-            raise RuntimeError("stop")
-        return FakeChild()
-
-    monkeypatch.setattr(worker, "_spawn", spawn)
-    worker._pump()
-    assert worker.dropped == 4
-    assert worker.peek() == (6, 4)
-
-
-def test_feed_worker_counts_no_loss_for_frames_a_batch_took():
-    """Retention evicting a frame that a batch already took loses
-    nothing: the reader's ``read`` marks the taken frontier, and only
-    evictions at or above it count as ``dropped``."""
-    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
-
-    url = "ws://127.0.0.1:9/feed"  # never dialed: start() is not called
-    worker = _FeedWorker(
-        url=url,
-        subscribe=None,
-        interval_seconds=0.0,
-        interval_messages=(),
-        retention=3,
-    )
-    reader = WebSocketStreamReader({"url": url})
-    reader._worker = worker
-    for i in range(3):
-        worker._append(b"frame-%d" % i)
-    batches, end = reader.read({"index": 0})
-    assert end == {"index": 3}
-    assert sum(b.num_rows for b in batches) == 3
-
-    for i in range(3, 5):
-        worker._append(b"frame-%d" % i)  # evicts taken frames 0 and 1
-    assert worker.dropped == 0
-    worker._append(b"frame-5")  # evicts frame 2, the last one taken
-    worker._append(b"frame-6")  # evicts frame 3, never taken
-    assert worker.dropped == 1
+def _fill(worker, monkeypatch, n):
+    """Hand ``worker`` ``n`` more frames: appends of ``frame-<index>`` to
+    the in-process buffer, or flushes of 2 frames from a fake feed child."""
+    if isinstance(worker, _ProcFeedWorker):
+        _pump_fake_child(worker, monkeypatch, n // 2)
+    else:
+        first = worker.peek()[0]
+        for i in range(first, first + n):
+            worker._append(b"frame-%d" % i)
 
 
 def _pump_fake_child(worker, monkeypatch, n_batches, per_batch=2):
@@ -2149,40 +2161,144 @@ def _pump_fake_child(worker, monkeypatch, n_batches, per_batch=2):
     worker._pump()
 
 
-def _multi_reader(workers, **options):
-    """A `websocket_multi` engine reader over pre-built feed buffers."""
-    from ws_to_kafka_spark.sources.websocket import MultiWebSocketStreamReader
+_MULTI_SCHEMA = StructType(
+    [
+        StructField("value", BinaryType()),
+        StructField("ws_timestamp", TimestampType()),
+        StructField("feed_id", IntegerType()),
+    ]
+)
 
+
+def _reader(monkeypatch, workers, **options):
+    """The engine's reader (``MultiWebSocketStreamReader``, schema with
+    ``feed_id``) over pre-built feed owners: its first ``read`` takes
+    them, in order, in place of new ones, then jumps each to its start
+    and starts it (a no-op here)."""
+    from ws_to_kafka_spark.sources import websocket as ws_mod
+
+    pending = iter(workers)
+    for w in workers:
+        monkeypatch.setattr(w, "start", lambda: None)
+    for name in ("_FeedWorker", "_ProcFeedWorker"):
+        monkeypatch.setattr(ws_mod, name, lambda cfg, retention: next(pending))
     urls = [w._cfg["url"] for w in workers]
-    reader = MultiWebSocketStreamReader(
-        {"urls": json.dumps(urls), **{k: str(v) for k, v in options.items()}}
-    )
-    reader.simple_reader._workers = list(workers)
-    return reader
-
-
-def _proc_worker(retention=100_000, port=9):
-    from ws_to_kafka_spark.sources.websocket import _ProcFeedWorker
-
-    return _ProcFeedWorker(
-        {"url": f"ws://127.0.0.1:{port}/feed", "reconnect_delay": 0.0},
-        retention=retention,
+    return ws_mod.MultiWebSocketStreamReader(
+        {"urls": json.dumps(urls), **{k: str(v) for k, v in options.items()}},
+        _MULTI_SCHEMA,
     )
 
 
-def test_proc_feed_worker_counts_no_loss_for_frames_a_batch_took(monkeypatch):
-    """The `websocket_multi` buffer counts only the frames of an evicted
-    child batch that lie at or above the frontier ``read`` took."""
-    worker = _proc_worker(retention=4)
-    _pump_fake_child(worker, monkeypatch, 2)  # frames [0, 4): fits
-    reader = _multi_reader([worker], max_records_per_batch=3)
+@pytest.mark.parametrize(
+    "kind, frames, dropped, peek, values",
+    [
+        # a full buffer evicts its oldest frame on each append
+        ("thread", 5, 2, (5, 2), [b"frame-2", b"frame-3", b"frame-4"]),
+        # whole child batches go once past `retention` frames
+        ("proc", 6, 4, (6, 4), [b"f0", b"f1"]),
+    ],
+    ids=["thread", "proc"],
+)
+def test_feed_worker_counts_frames_lost_to_retention(
+    monkeypatch, caplog, kind, frames, dropped, peek, values
+):
+    """Retention overflow is counted, never silent, by either feed
+    owner: ``dropped`` counts the evicted frames, and a read whose
+    admitted range starts below the oldest retained frame logs one
+    WARNING naming the feed and the frames lost."""
+    worker = _owner(kind, retention=3)
+    _fill(worker, monkeypatch, frames)
+    assert worker.dropped == dropped
+    assert worker.peek() == peek
+    reader = _reader(monkeypatch, [worker]).simple_reader
+
+    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        batches, end = reader.read({"feeds": [0]})
+    assert [v for b in batches for v in b.column("value").to_pylist()] == values
+    assert end == {"feeds": [peek[0]]}
+    warnings = [r for r in caplog.records if r.levelname == "WARNING"]
+    assert len(warnings) == 1
+    assert worker._cfg["url"] in warnings[0].getMessage()
+    assert f"{peek[1]} frames lost" in warnings[0].getMessage()
+
+    caplog.clear()
+    reader.read({"feeds": [peek[1]]})  # a read past the gap loses nothing
+    assert not caplog.records
+
+
+@pytest.mark.parametrize(
+    "kind, retention, first, cap, peek",
+    [("thread", 3, 3, 0, (7, 4)), ("proc", 4, 4, 3, (8, 4))],
+    ids=["thread", "proc"],
+)
+def test_feed_worker_counts_no_loss_for_frames_a_batch_took(
+    monkeypatch, kind, retention, first, cap, peek
+):
+    """Retention evicting a frame that a batch already took loses
+    nothing: the reader's ``read`` marks the taken frontier, and only
+    evictions at or above it count as ``dropped`` (the child's buffer
+    evicts whole batches, and counts only their untaken frames)."""
+    worker = _owner(kind, retention)
+    _fill(worker, monkeypatch, first)
+    reader = _reader(monkeypatch, [worker], max_records_per_batch=cap)
     batches, end = reader.simple_reader.read({"feeds": [0]})
     assert end == {"feeds": [3]}
     assert sum(b.num_rows for b in batches) == 3  # frames [0, 3) taken
 
-    _pump_fake_child(worker, monkeypatch, 2)  # [4, 8): evicts [0, 2), [2, 4)
-    assert worker.peek() == (8, 4)
-    assert worker.dropped == 1  # frame 3 only; 0-2 were taken
+    _fill(worker, monkeypatch, 2)  # evicts taken frames only
+    assert worker.dropped == 0
+    _fill(worker, monkeypatch, 2)  # evicts frame 3 too, never taken
+    assert worker.dropped == 1
+    assert worker.peek() == peek
+
+
+def test_reader_picks_the_feed_owner_from_the_feed_count(monkeypatch):
+    """One feed is read by a thread of the source runner (every frame
+    through a child would also wait for its next 15 ms flush); two or
+    more get one feed child each, on either source's options."""
+    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
+
+    monkeypatch.setattr(_FeedWorker, "start", lambda self: None)
+    monkeypatch.setattr(_ProcFeedWorker, "start", lambda self: None)
+    url = "ws://127.0.0.1:9/feed"
+    cases = [
+        ({"url": url}, [_FeedWorker]),
+        ({"urls": json.dumps([url])}, [_FeedWorker]),
+        ({"url": url, "fan_out": "2"}, [_ProcFeedWorker] * 2),
+        ({"urls": json.dumps([url, url, url])}, [_ProcFeedWorker] * 3),
+    ]
+    for options, owners in cases:
+        reader = WebSocketStreamReader(options)
+        reader.read(reader.initialOffset())
+        assert [type(f) for f in reader._feeds] == owners, options
+
+
+def test_websocket_stop_stops_its_feed(monkeypatch):
+    """Stopping a ``websocket`` query stops its feed. Spark builds the
+    reader with ``_streamReader`` and its source runner ends with
+    ``reader.stop()``; pyspark's own wrapper around a simple reader
+    has a no-op ``stop``, which left the feed thread redialing until the
+    runner process exited."""
+    from pyspark.sql.datasource_internal import _streamReader
+
+    from ws_to_kafka_spark.sources import websocket as ws_mod
+
+    stopped = []
+
+    class FakeFeed(_FeedWorker):
+        def start(self):
+            pass
+
+        def stop(self):
+            stopped.append(self)
+
+    monkeypatch.setattr(ws_mod, "_FeedWorker", FakeFeed)
+    source = ws_mod.WebSocketDataSource({"url": "ws://127.0.0.1:9/feed"})
+    schema = StructType(_MULTI_SCHEMA.fields[:2])
+    reader = _streamReader(source, schema)
+    reader.latestOffset()  # the first read starts the feed
+    reader.stop()
+    assert len(stopped) == 1 and isinstance(stopped[0], FakeFeed)
 
 
 def test_websocket_multi_resume_jumps_fresh_feeds_to_the_offset(monkeypatch):
@@ -2191,8 +2307,8 @@ def test_websocket_multi_resume_jumps_fresh_feeds_to_the_offset(monkeypatch):
     and the first ``latestOffset`` reads from it. Each fresh feed must
     jump to its own start, so frames after the restart are numbered
     from there, not from 0 (which the engine would treat as consumed)."""
-    feeds = [_proc_worker(port=9), _proc_worker(port=10)]
-    reader = _multi_reader(feeds)
+    feeds = [_owner("proc", port=9), _owner("proc", port=10)]
+    reader = _reader(monkeypatch, feeds)
     resumed = {"feeds": [5, 7]}
     reader.partitions(resumed, resumed)
     assert reader.latestOffset() == resumed  # nothing new yet
@@ -2216,10 +2332,10 @@ def test_websocket_multi_capped_read_windows_from_the_oldest_frame(
     a start that retention overflow has passed admits ``cap`` frames
     from the oldest one left (and warns about the gap), never ``cap``
     frames from the lost start."""
-    worker = _proc_worker(retention=4)
+    worker = _owner("proc", retention=4)
     _pump_fake_child(worker, monkeypatch, 4)  # [0, 8); [4, 8) retained
     assert worker.peek() == (8, 4)
-    reader = _multi_reader([worker], max_records_per_batch=3).simple_reader
+    reader = _reader(monkeypatch, [worker], max_records_per_batch=3).simple_reader
 
     with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
         batches, end = reader.read({"feeds": [0]})
@@ -2234,43 +2350,44 @@ def test_websocket_multi_capped_read_windows_from_the_oldest_frame(
     assert end == {"feeds": [8]}
 
 
-def test_websocket_readbetween_without_a_feed_warns_of_the_lost_frames(caplog):
-    """A replayed batch served by a reader with no live feed (an executor
-    copy, or a restart replay) runs empty; the frames it could not serve
-    are logged, never silent."""
-    from ws_to_kafka_spark.sources.websocket import WebSocketStreamReader
-
-    url = "ws://127.0.0.1:9/feed"
-    reader = WebSocketStreamReader({"url": url})
-    with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
-        assert list(reader.readBetweenOffsets({"index": 3}, {"index": 10})) == []
-        assert list(reader.readBetweenOffsets({"index": 10}, {"index": 10})) == []
-    (warning,) = [r for r in caplog.records if r.levelname == "WARNING"]
-    assert url in warning.getMessage()
-    assert "7 frames" in warning.getMessage()
-
-
-def test_websocket_multi_readbetween_without_a_feed_warns_of_the_lost_frames(
-    caplog,
+@pytest.mark.parametrize(
+    "options, urls, start, end",
+    [
+        ({"url": "ws://127.0.0.1:9/feed"}, ["ws://127.0.0.1:9/feed"], [3], [10]),
+        (
+            {"urls": json.dumps(["ws://127.0.0.1:9/a", "ws://127.0.0.1:9/b",
+                                 "ws://127.0.0.1:9/c"])},
+            ["ws://127.0.0.1:9/a", "ws://127.0.0.1:9/b", "ws://127.0.0.1:9/c"],
+            [2, 4, 6],
+            [5, 4, 10],
+        ),
+    ],
+    ids=["websocket", "websocket_multi"],
+)
+def test_websocket_readbetween_without_a_feed_warns_of_the_lost_frames(
+    caplog, options, urls, start, end
 ):
-    """The executor path of `websocket_multi`: the wrapper's
-    ``read(partition)`` replays through ``readBetweenOffsets`` on a
-    reader that never started its feeds, so the batch is lost — one
-    WARNING names the feeds and the frames."""
+    """The executor path: the wrapper's ``read(partition)`` replays
+    through ``readBetweenOffsets`` on a reader that never started its
+    feeds (an executor copy, or a restart replay), so the batch runs
+    empty — one WARNING names the feeds with frames in the range and the
+    frames lost, and an empty range warns of nothing."""
     from pyspark.sql.datasource_internal import SimpleInputPartition
 
     from ws_to_kafka_spark.sources.websocket import MultiWebSocketStreamReader
 
-    urls = ["ws://127.0.0.1:9/a", "ws://127.0.0.1:9/b", "ws://127.0.0.1:9/c"]
-    reader = MultiWebSocketStreamReader({"urls": json.dumps(urls)})
-    part = SimpleInputPartition({"feeds": [2, 4, 6]}, {"feeds": [5, 4, 10]})
+    reader = MultiWebSocketStreamReader(options)
     with caplog.at_level("WARNING", logger="ws_to_kafka_spark.sources"):
+        part = SimpleInputPartition({"feeds": start}, {"feeds": end})
+        assert list(reader.read(part)) == []
+        part = SimpleInputPartition({"feeds": end}, {"feeds": end})
         assert list(reader.read(part)) == []
     (warning,) = [r for r in caplog.records if r.levelname == "WARNING"]
     msg = warning.getMessage()
-    assert urls[0] in msg and urls[2] in msg and urls[1] not in msg
+    for url, s, e in zip(urls, start, end):
+        assert (url in msg) == (e > s), url
     assert "7 frames" in msg
-    assert reader.simple_reader._workers is None  # no feed was started
+    assert reader.simple_reader._feeds is None  # no feed was started
 
 
 def test_websocket_multi_source_runner_sends_arrow_batches_to_the_jvm(
@@ -2289,30 +2406,16 @@ def test_websocket_multi_source_runner_sends_arrow_batches_to_the_jvm(
     from pyspark.serializers import read_int, write_with_length
     from pyspark.sql.datasource_internal import _streamReader
     from pyspark.sql.streaming import python_streaming_source_runner as runner
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
 
     from ws_to_kafka_spark.sources.websocket import MultiWebSocketDataSource
 
-    worker = _proc_worker()
+    worker = _owner("proc")
     _pump_fake_child(worker, monkeypatch, 3)  # frames [0, 6)
+    _reader(monkeypatch, [worker])  # the source's reader takes `worker`
     source = MultiWebSocketDataSource(
         {"urls": json.dumps([worker._cfg["url"]])}
     )
-    schema = StructType(
-        [
-            StructField("value", BinaryType()),
-            StructField("ws_timestamp", TimestampType()),
-            StructField("feed_id", IntegerType()),
-        ]
-    )
-    reader = _streamReader(source, schema)
-    reader.simple_reader._workers = [worker]
+    reader = _streamReader(source, _MULTI_SCHEMA)
     start = reader.initialOffset()
     end = reader.latestOffset()
     assert end == {"feeds": [6]}
@@ -2321,7 +2424,7 @@ def test_websocket_multi_source_runner_sends_arrow_batches_to_the_jvm(
     for offset in (start, end):
         write_with_length(json.dumps(offset).encode("utf-8"), infile)
     infile.seek(0)
-    runner.partitions_func(reader, source, schema, 10_000, infile, outfile)
+    runner.partitions_func(reader, source, _MULTI_SCHEMA, 10_000, infile, outfile)
 
     outfile.seek(0)
     assert read_int(outfile) == 1  # one input partition

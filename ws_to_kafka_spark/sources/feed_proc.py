@@ -1,5 +1,5 @@
-"""Subprocess feed reader for ``websocket_multi`` (round-10 VERDICT
-item 6 — multi-socket ingest scaling).
+"""Subprocess feed owner for a stream reader with two or more feeds
+(``websocket_multi`` over N sockets; one feed stays in-process).
 
 One OS process per WebSocket connection: the GIL-bound per-frame work —
 ws frame parse, unmask, arrival timestamping — runs in this child
@@ -16,7 +16,7 @@ Wire format (child stdout, little-endian):
 
 The connection itself — dial -> subscribe -> read -> redial with backoff,
 drift-free interval resends — is ``ws_client.FeedConnection``, the one
-loop every reader in this package shares; this child adds only its
+loop both feed owners share; this child adds only its
 per-frame step (timestamp and enqueue) and the pending list's flush
 loop. The parent side (`websocket.py`) only moves opaque byte batches
 off the pipe; the reader unpacks them, one packed batch at a time with
@@ -34,7 +34,7 @@ import sys
 import threading
 import time
 
-from .ws_client import RECONNECT_DELAY_S, FeedConnection
+from .ws_client import FeedConnection
 
 _FLUSH_SECONDS = 0.015
 
@@ -96,14 +96,7 @@ def _connection(cfg: dict, pending: list, lock: threading.Lock) -> FeedConnectio
         with lock:
             pending.append((ts, bytes(payload)))
 
-    return FeedConnection(
-        cfg["url"],
-        on_frame,
-        subscribe=cfg.get("subscribe"),
-        interval=float(cfg.get("interval", 0) or 0),
-        interval_messages=cfg.get("interval_messages") or (),
-        reconnect_delay=float(cfg.get("reconnect_delay", RECONNECT_DELAY_S)),
-    )
+    return FeedConnection(on_frame=on_frame, **cfg)
 
 
 def main(argv: list[str]) -> int:

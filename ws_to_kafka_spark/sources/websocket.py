@@ -1,5 +1,5 @@
-"""WebSocket streaming source — the reference's core capability, as a
-PySpark Python DataSource (Spark 4.x ``pyspark.sql.datasource`` API).
+"""WebSocket streaming sources — the reference's core capability, as
+PySpark Python DataSources (Spark 4.x ``pyspark.sql.datasource`` API).
 
 Reference behaviors reproduced (``/root/reference/src/wsclient.hpp``):
 
@@ -7,7 +7,7 @@ Reference behaviors reproduced (``/root/reference/src/wsclient.hpp``):
   (``wsclient.hpp:132-168``; subscribe at ``:144``);
 * on connection error: log, sleep 5 s, full re-resolve/re-handshake/
   re-subscribe (``wsclient.hpp:158-162``, ``kErrorDelay`` at ``:22``) —
-  both readers below run this one loop, ``ws_client.FeedConnection``;
+  both feed owners below run this one loop, ``ws_client.FeedConnection``;
 * handshake/idle timeouts 2 s / 10 s with ping keep-alive
   (``wsclient.hpp:20-21,141-142``);
 * periodic control messages re-sent every ``interval`` seconds
@@ -26,29 +26,33 @@ a WebSocket is not replayable, so offsets only bound microbatches —
 better than the reference, which loses everything in flight), and frames
 arriving while disconnected are lost on both systems.
 
-Scale note: one WebSocket connection is inherently ONE input partition
-(the reference is likewise single-connection, ``wsclient.hpp:38-53``);
-parallelism comes from running one source per stream/topic and from
-everything downstream of the source exchange. Both readers buffer on
-the driver, which is exactly where a single ordered socket must
-serialize anyway, and both are simple readers: Spark's driver-side
-source runner calls ``read`` and sends its Arrow batches straight to
-the JVM block store, so no executor Python task runs in the source
-stage. For sharded feeds, ``websocket_multi`` (below) runs N
-connections, each decoded in its own child process, and unpacks their
-packed batches on the source runner into one input partition per
-microbatch; per-feed frame order is preserved and the first shuffle
-downstream restores the width.
+One reader serves both sources: `WebSocketStreamReader` reads N >= 1
+feeds with the offset ``{"feeds": [i0, i1, ...]}`` (each feed's next
+frame index), and `MultiWebSocketStreamReader` wraps it in pyspark's
+prefetching wrapper. ``websocket`` is the reference's one socket;
+``websocket_multi`` reads N sockets and tags each row with its
+``feed_id``.
+
+Scale note: the reader buffers on the driver, which is exactly where a
+single ordered socket must serialize anyway. Spark's driver-side source
+runner calls ``read`` and sends its Arrow batches straight to the JVM
+block store as the microbatch's one input partition, so no executor
+Python task runs in the source stage; per-feed frame order is preserved
+and the first shuffle downstream restores the width. The feed owner
+follows the feed count: one feed is read by a thread of the runner
+(`_FeedWorker`); two or more are each decoded in their own child process
+(`_ProcFeedWorker`), so N sockets decode on N cores.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import threading
+import time
 from collections import deque
-from dataclasses import dataclass
-from datetime import datetime, timezone
+from itertools import islice
 
 #: Arrow `binary` (non-large) offsets are int32: one batch's gathered
 #: payload must stay under 2 GiB or the offsets buffer wraps. Module
@@ -94,69 +98,73 @@ def _warn_unserved(urls: list[str], frames: int) -> None:
 # errors="replace" is lossy exactly there; Kafka's sink contract accepts
 # binary values natively, and text consumers cast: value.cast("string").
 _SCHEMA_DDL = "value binary, ws_timestamp timestamp"
+_MULTI_SCHEMA_DDL = "value binary, ws_timestamp timestamp, feed_id int"
+
+#: Rows per pyarrow RecordBatch handed to the prefetch runner — bounds
+#: the allocation of a post-restart drain batch (the runner does NOT
+#: re-slice RecordBatches the way it batches tuple iterators).
+_ARROW_CHUNK_ROWS = 20_000
 
 
-@dataclass
-class _Record:
-    index: int
-    value: bytes
-    ts: datetime
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(feed_id: bool):
+    """The Arrow schema of a feed's batches, ``(value, ws_timestamp)``,
+    or of the reader's rows with ``feed_id`` appended — built with the
+    runner's own ``to_arrow_schema``, so types (binary, timestamp[us]
+    with the session tz rule) match exactly."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (  # built directly: the source runner
+        BinaryType,                  # has no live context for DDL parsing
+        IntegerType,
+        StructField,
+        TimestampType,
+    )
+
+    fields = [
+        StructField("value", BinaryType()),
+        StructField("ws_timestamp", TimestampType()),
+    ]
+    if feed_id:
+        fields.append(StructField("feed_id", IntegerType()))
+    return to_arrow_schema(StructType(fields))
 
 
-class _FeedWorker:
-    """Retention buffer over one `FeedConnection` (dial → subscribe →
-    read, redialing forever — the reference's Start() loop): numbers
-    each frame, stamps its arrival time and keeps the newest
-    ``retention`` frames for the reader. ``dropped`` counts the frames
-    retention overflow evicted before a batch took them (see
-    ``mark_taken``)."""
+def _records_to_batches(records):
+    """``(value, ts_micros)`` records → pyarrow RecordBatches of
+    ``(value, ws_timestamp)``, ``_ARROW_CHUNK_ROWS`` rows at most each."""
+    import pyarrow as pa
 
-    def __init__(
-        self,
-        url: str,
-        subscribe: str | None,
-        interval_seconds: float,
-        interval_messages: tuple[str, ...],
-        reconnect_delay: float = RECONNECT_DELAY_S,
-        retention: int = 100_000,
-    ):
-        self._url = url
-        self._buffer: deque[_Record] = deque(maxlen=retention)
+    schema = _arrow_schema(False)
+    out = []
+    for lo in range(0, len(records), _ARROW_CHUNK_ROWS):
+        chunk = records[lo:lo + _ARROW_CHUNK_ROWS]
+        out.append(
+            pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r[0] for r in chunk], type=schema[0].type),
+                    pa.array([r[1] for r in chunk], type=schema[1].type),
+                ],
+                schema=schema,
+            )
+        )
+    return out
+
+
+class _Feed:
+    """What both feed owners share: the feed's config, frame numbering,
+    the taken frontier and the ``dropped`` count."""
+
+    def __init__(self, cfg: dict):
+        self._cfg = dict(cfg)
         self._lock = threading.Lock()
         self._next_index = 0
         self._taken = 0
         self.dropped = 0
-        self._conn = FeedConnection(
-            url,
-            self._append,
-            subscribe=subscribe,
-            interval=interval_seconds,
-            interval_messages=interval_messages,
-            reconnect_delay=reconnect_delay,
-        )
 
-    def start(self) -> threading.Thread:
-        return self._conn.start("ws-feed")
-
-    def stop(self) -> None:
-        self._conn.stop()
-
-    # -- buffer -------------------------------------------------------------
-
-    def _append(self, payload: bytes) -> None:
-        rec = _Record(
-            index=self._next_index,
-            value=bytes(payload),  # byte-faithful (main.cpp:48-50 parity)
-            ts=datetime.now(timezone.utc),
-        )
+    def jump(self, start: int) -> None:
+        """Number the next frame ``start``; called before ``start()``."""
         with self._lock:
-            self._next_index += 1
-            if (
-                len(self._buffer) == self._buffer.maxlen
-                and self._buffer[0].index >= self._taken
-            ):
-                self.dropped += 1  # the append evicts an untaken frame
-            self._buffer.append(rec)
+            self._next_index = max(self._next_index, start)
 
     def mark_taken(self, end_index: int) -> None:
         """A batch took every frame below ``end_index``: evicting those
@@ -164,67 +172,97 @@ class _FeedWorker:
         with self._lock:
             self._taken = max(self._taken, end_index)
 
-    def snapshot(self, start_index: int) -> tuple[list[_Record], int]:
-        """Records with index >= start_index, plus the next offset."""
-        with self._lock:
-            records = [r for r in self._buffer if r.index >= start_index]
-            oldest = records[0].index if records else self._next_index
-            next_index = self._next_index
-        _warn_if_lost(self._url, start_index, oldest, next_index)
-        return records, next_index
 
-    def between(self, start_index: int, end_index: int) -> list[_Record]:
+class _FeedWorker(_Feed):
+    """The owner of a reader's only feed: one `FeedConnection` (dial →
+    subscribe → read, redialing forever — the reference's Start() loop)
+    in a thread of this process. It numbers each frame, stamps its
+    arrival time and keeps the newest ``retention`` frames for the
+    reader. Frame numbers are contiguous, so frame ``i`` sits at
+    position ``i - (next index - len(buffer))`` of the buffer.
+    ``dropped`` counts the frames retention overflow evicted before a
+    batch took them (see ``mark_taken``)."""
+
+    def __init__(self, cfg: dict, retention: int = 100_000):
+        super().__init__(cfg)
+        self._buffer: deque[tuple[bytes, int]] = deque(maxlen=retention)
+        self._conn = FeedConnection(on_frame=self._append, **self._cfg)
+
+    def start(self) -> threading.Thread:
+        return self._conn.start("ws-feed")
+
+    def stop(self) -> None:
+        self._conn.stop()
+
+    def _append(self, payload: bytes) -> None:
+        # byte-faithful (main.cpp:48-50 parity), stamped in epoch micros
+        frame = (bytes(payload), time.time_ns() // 1000)
         with self._lock:
-            return [r for r in self._buffer if start_index <= r.index < end_index]
+            buf = self._buffer
+            if len(buf) == buf.maxlen and self._next_index - len(buf) >= self._taken:
+                self.dropped += 1  # the append evicts an untaken frame
+            buf.append(frame)
+            self._next_index += 1
+
+    # -- the reader-facing surface -------------------------------------------
+
+    def peek(self) -> tuple[int, int]:
+        """(next_index, oldest retained index)."""
+        with self._lock:
+            return self._next_index, self._next_index - len(self._buffer)
+
+    def batches(self, start: int, end: int) -> list:
+        """The retained frames numbered [start, end) as RecordBatches."""
+        with self._lock:
+            first = self._next_index - len(self._buffer)
+            records = list(
+                islice(self._buffer, max(start - first, 0), max(end - first, 0))
+            )
+        return _records_to_batches(records)
 
     def prune(self, end_index: int) -> None:
         with self._lock:
-            while self._buffer and self._buffer[0].index < end_index:
+            first = self._next_index - len(self._buffer)
+            for _ in range(min(end_index - first, len(self._buffer))):
                 self._buffer.popleft()
 
 
 class _BatchRec:
     """One child-process flush: ``n`` frames packed in ``body`` (see
-    feed_proc wire format), numbered [index, index+n)."""
+    feed_proc wire format), numbered [first, first+n)."""
 
-    __slots__ = ("index", "n", "body")
+    __slots__ = ("first", "n", "body")
 
-    def __init__(self, index: int, n: int, body: bytes):
-        self.index = index
+    def __init__(self, first: int, n: int, body: bytes):
+        self.first = first
         self.n = n
         self.body = body
 
 
-class _ProcFeedWorker:
-    """Process-isolated connection owner (round-10): the socket + frame
-    decode live in a `feed_proc` child process on its own core; this
-    driver-side shell pumps length-prefixed batches off the pipe —
-    O(1) Python work per BATCH — and serves the peek/batches_between/
-    prune/jump surface `MultiWebSocketStreamReader` reads from.
-    Four sockets through the round-9 in-process thread design totalled
-    0.93x ONE socket (GIL); per-frame decode now runs N-wide in children,
-    and the reader unpacks whole packed batches with vectorized code.
-    ``dropped`` counts the frames retention overflow evicted before a
-    batch took them (see ``mark_taken``)."""
+class _ProcFeedWorker(_Feed):
+    """The owner of each feed of a reader with two or more: the socket
+    and frame decode live in a `feed_proc` child process on its own
+    core; this driver-side shell pumps length-prefixed batches off the
+    pipe — O(1) Python work per BATCH — and keeps the newest
+    ``retention`` frames, in whole batches, for the reader. Four sockets
+    through one process's threads totalled 0.93x ONE socket (GIL). One
+    feed does not use it: through the child, every frame also waits for
+    the child's next 15 ms flush. ``dropped`` counts the frames
+    retention overflow evicted before a batch took them (see
+    ``mark_taken``)."""
 
     def __init__(self, cfg: dict, retention: int = 100_000):
-        self._cfg = dict(cfg)
+        super().__init__(cfg)
         self._retention = retention
         self._buffer: deque[_BatchRec] = deque()
         self._n_buffered = 0
-        self._lock = threading.Lock()
-        self._next_index = 0
-        self._taken = 0
-        self.dropped = 0
         self._stop = threading.Event()
         self._proc = None
-        self._pump_thread: threading.Thread | None = None
 
-    def start(self) -> None:
-        self._pump_thread = threading.Thread(
-            target=self._pump, name="ws-feed-pump", daemon=True
-        )
-        self._pump_thread.start()
+    def start(self) -> threading.Thread:
+        pump = threading.Thread(target=self._pump, name="ws-feed-pump", daemon=True)
+        pump.start()
+        return pump
 
     def _spawn(self):
         import os
@@ -310,9 +348,9 @@ class _ProcFeedWorker:
                         evicted = self._buffer.popleft()
                         self._n_buffered -= evicted.n
                         # only its frames at or above the taken frontier
-                        end = evicted.index + evicted.n
+                        end = evicted.first + evicted.n
                         if end > self._taken:
-                            self.dropped += end - max(evicted.index, self._taken)
+                            self.dropped += end - max(evicted.first, self._taken)
             # child died unexpectedly: the reference's persistent-feed
             # contract says redial forever; frame numbering continues.
             if not self._stop.is_set():
@@ -339,35 +377,24 @@ class _ProcFeedWorker:
     def peek(self) -> tuple[int, int]:
         """(next_index, oldest retained index)."""
         with self._lock:
-            lo = self._buffer[0].index if self._buffer else self._next_index
+            lo = self._buffer[0].first if self._buffer else self._next_index
             return self._next_index, lo
 
-    def mark_taken(self, end_index: int) -> None:
-        """A batch took every frame below ``end_index``: evicting those
-        later loses nothing."""
+    def batches(self, start: int, end: int) -> list:
+        """The retained frames numbered [start, end) as RecordBatches."""
         with self._lock:
-            self._taken = max(self._taken, end_index)
-
-    def batches_between(self, start: int, end: int) -> list[_BatchRec]:
-        with self._lock:
-            return [
-                r
-                for r in self._buffer
-                if r.index < end and r.index + r.n > start
+            recs = [
+                r for r in self._buffer if r.first < end and r.first + r.n > start
             ]
+        return _unpack_frames(recs, start, end)
 
     def prune(self, end_index: int) -> None:
         with self._lock:
             while self._buffer and (
-                self._buffer[0].index + self._buffer[0].n <= end_index
+                self._buffer[0].first + self._buffer[0].n <= end_index
             ):
                 dropped = self._buffer.popleft()
                 self._n_buffered -= dropped.n
-
-    def jump(self, start: int) -> None:
-        with self._lock:
-            if start > self._next_index:
-                self._next_index = start
 
     def stop(self) -> None:
         self._stop.set()
@@ -375,226 +402,11 @@ class _ProcFeedWorker:
         self._reap(proc)
 
 
-#: Rows per pyarrow RecordBatch handed to the prefetch runner — bounds
-#: the allocation of a post-restart drain batch (the runner does NOT
-#: re-slice RecordBatches the way it batches tuple iterators).
-_ARROW_CHUNK_ROWS = 20_000
-
-_ARROW_SCHEMA = None  # lazily built per process (import cost)
-
-
-def _records_to_batches(records):
-    """(value, ts) records → list of pyarrow RecordBatches matching the
-    runner's to_arrow_schema(_SCHEMA_DDL) exactly."""
-    global _ARROW_SCHEMA
-    import pyarrow as pa
-
-    if _ARROW_SCHEMA is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import (  # DDL parse needs a live context;
-            BinaryType,                  # the runner process has none
-            StructField,
-            StructType,
-            TimestampType,
-        )
-
-        _ARROW_SCHEMA = to_arrow_schema(
-            StructType(
-                [
-                    StructField("value", BinaryType()),
-                    StructField("ws_timestamp", TimestampType()),
-                ]
-            )
-        )
-    out = []
-    for lo in range(0, len(records), _ARROW_CHUNK_ROWS):
-        chunk = records[lo:lo + _ARROW_CHUNK_ROWS]
-        out.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r.value for r in chunk], type=_ARROW_SCHEMA[0].type),
-                    pa.array([r.ts for r in chunk], type=_ARROW_SCHEMA[1].type),
-                ],
-                schema=_ARROW_SCHEMA,
-            )
-        )
-    return out
-
-
-class WebSocketStreamReader(SimpleDataSourceStreamReader):
-    """Simple (driver-buffered) stream reader over one WebSocket feed.
-
-    Pickling contract: Spark ships this reader to (a) the driver-side
-    prefetch runner process, which calls ``read()`` and OWNS the live
-    connection, and (b) executors, which only ever call
-    ``readBetweenOffsets`` as a cache-miss fallback. The live worker
-    (threads, socket, locks) is therefore started LAZILY on first
-    ``read()`` and excluded from pickles; an executor copy without a
-    worker answers the fallback with an empty replay and logs the frames
-    it lost — the reference's at-most-once (SURVEY.md §2.1), never a
-    second competing connection.
-    """
-
-    def __init__(self, options: dict):
-        if not options.get("url"):
-            raise ValueError("websocket source requires an 'url' option")
-        self._options = dict(options)
-        self._worker: _FeedWorker | None = None
-
-    def __getstate__(self) -> dict:
-        return {"_options": self._options}
-
-    def __setstate__(self, state: dict) -> None:
-        self._options = state["_options"]
-        self._worker = None
-
-    def _ensure_worker(self, base_index: int = 0) -> _FeedWorker:
-        if self._worker is None:
-            opts = self._options
-            parsed = json.loads(opts.get("interval_messages") or "[]")
-            self._worker = _FeedWorker(
-                url=opts["url"],
-                subscribe=opts.get("subscribe"),
-                interval_seconds=float(opts.get("interval", 0) or 0),
-                interval_messages=tuple(
-                    m if isinstance(m, str) else json.dumps(m) for m in parsed
-                ),
-                reconnect_delay=float(
-                    opts.get("reconnect_delay", RECONNECT_DELAY_S)
-                ),
-                retention=int(opts.get("retention", 100_000)),
-            )
-            # Checkpoint-restart: the engine resumes from committed offset N,
-            # but a socket cannot replay — a fresh worker numbering from 0
-            # would have its first N frames treated as already-consumed and
-            # silently skipped. Baseline the new connection's numbering at
-            # the resume offset instead: restart means "continue from now",
-            # the reference's semantics (it restarts from scratch,
-            # /root/reference/src/wsclient.hpp:158-162 — ours additionally
-            # keeps offsets monotonic for the engine's bookkeeping).
-            self._worker._next_index = base_index
-            self._worker.start()
-        return self._worker
-
-    def initialOffset(self) -> dict:
-        return {"index": 0}
-
-    def read(self, start: dict) -> tuple:
-        records, next_index = self._ensure_worker(start["index"]).snapshot(
-            start["index"]
-        )
-        # Admission control (the kafka maxOffsetsPerTrigger analog): cap
-        # rows per microbatch so a burst — or a backlog after restart —
-        # drains as several bounded batches instead of one giant one.
-        # Bounded batches keep per-batch latency flat and state-store /
-        # sink pressure constant; the un-consumed tail stays in the
-        # buffer and the returned offset only advances past what this
-        # batch actually took. 0 (default) = unlimited, the reference's
-        # drain-everything behavior.
-        cap = int(self._options.get("max_records_per_batch", 0) or 0)
-        if cap > 0 and len(records) > cap:
-            records = records[:cap]
-            next_index = records[-1].index + 1
-        self._worker.mark_taken(next_index)
-        if not records:
-            return iter(()), {"index": next_index}
-        # Deliver as pyarrow RecordBatches, not per-row tuples (round-12
-        # VERDICT item 5): the prefetch runner's
-        # records_to_arrow_batches yields RecordBatches straight into
-        # the JVM Arrow stream, skipping the per-row converter pipeline
-        # (type-check + field conversion per tuple) that dominated the
-        # per-batch addBatch cost. Arrays are built with the SAME
-        # to_arrow_schema call the runner itself uses, so types (binary,
-        # timestamp[us] with the session tz rule) match exactly; chunks
-        # of _ARROW_CHUNK_ROWS keep a post-restart drain batch from
-        # materializing as one giant allocation.
-        return iter(_records_to_batches(records)), {"index": next_index}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # Failure recovery: best-effort replay from the retention cache.
-        # A socket can't seek — outside the cache (or on a worker-less
-        # executor copy) this degrades to the reference's at-most-once,
-        # counted in the log.
-        if self._worker is None:
-            _warn_unserved(
-                [self._options["url"]], end["index"] - start["index"]
-            )
-            return iter(())
-        return iter(
-            (r.value, r.ts) for r in self._worker.between(start["index"], end["index"])
-        )
-
-    def commit(self, end: dict) -> None:
-        if self._worker is not None:
-            self._worker.prune(end["index"])
-
-    def stop(self) -> None:
-        if self._worker is not None:
-            self._worker.stop()
-
-
-class WebSocketDataSource(DataSource):
-    """``spark.readStream.format("websocket")`` after registration.
-
-    Options (mirroring config.json fields, ``/root/reference/src/main.cpp:
-    80-97``): ``url``, ``subscribe`` (message sent on every (re)connect),
-    ``interval`` + ``interval_messages`` (JSON array, re-sent every
-    interval), ``reconnect_delay``, ``retention``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "websocket"
-
-    def schema(self) -> str:
-        return _SCHEMA_DDL
-
-    def simpleStreamReader(self, schema: StructType) -> WebSocketStreamReader:
-        return WebSocketStreamReader(dict(self.options))
-
-
-def register_websocket_source(spark) -> None:
-    """Register the source under the name ``websocket`` (idempotent)."""
-    spark.dataSource.register(WebSocketDataSource)
-
-
-# ---------------------------------------------------------------------------
-# Multi-connection source: N sockets -> one prefetched batch per microbatch.
-# ---------------------------------------------------------------------------
-
-_MULTI_SCHEMA_DDL = "value binary, ws_timestamp timestamp, feed_id int"
-
-_MULTI_ARROW_SCHEMA = None
-
-
-def _multi_arrow_schema():
-    global _MULTI_ARROW_SCHEMA
-    if _MULTI_ARROW_SCHEMA is None:
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import (  # built directly: the source runner
-            BinaryType,                  # has no live context for DDL parsing
-            IntegerType,
-            StructField,
-            StructType,
-            TimestampType,
-        )
-
-        _MULTI_ARROW_SCHEMA = to_arrow_schema(
-            StructType(
-                [
-                    StructField("value", BinaryType()),
-                    StructField("ws_timestamp", TimestampType()),
-                    StructField("feed_id", IntegerType()),
-                ]
-            )
-        )
-    return _MULTI_ARROW_SCHEMA
-
-
-def _unpack_frames(batches, feed_id: int, start: int, end: int) -> list:
+def _unpack_frames(batches, start: int, end: int) -> list:
     """Unpack the frames numbered [start, end) out of child-packed
     batches (`_BatchRec`, feed_proc wire format) into pyarrow
-    RecordBatches, one per packed batch that holds any of them.
+    RecordBatches of ``(value, ws_timestamp)``, one per packed batch
+    that holds any of them.
 
     Only the header walk (the offset chain is sequential by format)
     stays a Python loop; the payload bytes move via ONE numpy
@@ -610,11 +422,11 @@ def _unpack_frames(batches, feed_id: int, start: int, end: int) -> list:
     import pyarrow as pa
     import struct
 
-    schema = _multi_arrow_schema()
+    schema = _arrow_schema(False)
     unpack = struct.unpack_from
     out = []
     for rec in batches:
-        first, n, body = rec.index, rec.n, rec.body
+        first, n, body = rec.first, rec.n, rec.body
         ts = np.empty(n, dtype=np.int64)
         starts = np.empty(n, dtype=np.int64)
         lens = np.empty(n, dtype=np.int64)
@@ -660,20 +472,25 @@ def _unpack_frames(batches, feed_id: int, start: int, end: int) -> list:
         ts_arr = pa.Array.from_buffers(
             schema[1].type, m, [None, pa.py_buffer(ts_s.copy())]
         )
-        fid_arr = pa.array(
-            np.full(m, feed_id, dtype=np.int32), type=schema[2].type
-        )
-        out.append(
-            pa.RecordBatch.from_arrays([val_arr, ts_arr, fid_arr], schema=schema)
-        )
+        out.append(pa.RecordBatch.from_arrays([val_arr, ts_arr], schema=schema))
     return out
+
+
+def _with_feed_id(batches: list, feed_id: int) -> list:
+    """A feed's ``(value, ws_timestamp)`` batches with ``feed_id``
+    appended as a constant column."""
+    import pyarrow as pa
+
+    field = _arrow_schema(True).field("feed_id")
+    fid = pa.scalar(feed_id, type=field.type)
+    return [b.append_column(field, pa.repeat(fid, b.num_rows)) for b in batches]
 
 
 def _parse_specs(opts: dict) -> list[dict]:
     """Feed specs from options: ``urls`` (JSON array of url strings),
     optionally paired with ``subscribes`` (JSON array, same length);
     or ``url`` (+ ``subscribe``) with ``fan_out`` N identical
-    connections (subscription-sharding servers)."""
+    connections (subscription-sharding servers; 1 by default)."""
     urls_raw = opts.get("urls")
     if urls_raw:
         urls = json.loads(urls_raw)
@@ -696,122 +513,135 @@ def _parse_specs(opts: dict) -> list[dict]:
             for _ in range(n)
         ]
     raise ValueError(
-        "websocket_multi source requires 'urls' (JSON array) or "
-        "'url' [+ 'fan_out']"
+        "websocket source requires an 'url' option [+ 'fan_out'], or "
+        "'urls' (JSON array)"
     )
 
 
-class _MultiFeedReader(SimpleDataSourceStreamReader):
-    """The simple reader `MultiWebSocketStreamReader` wraps: one
-    `_ProcFeedWorker` per configured feed, and one entry per feed in the
-    offset ``{"feeds": [i0, i1, ...]}`` (per-feed next index). Feeds
-    start on the first ``read``, which runs in the source runner; a
-    planner or executor copy never starts one."""
+def _feed_offsets(offset: dict) -> list[int]:
+    """Each feed's next index in ``offset``. The one-feed ``websocket``
+    source wrote ``{"index": n}`` before both sources shared this
+    reader; it reads as ``{"feeds": [n]}``, so those checkpoints
+    resume."""
+    return offset["feeds"] if "feeds" in offset else [offset["index"]]
 
-    def __init__(self, options: dict):
+
+class WebSocketStreamReader(SimpleDataSourceStreamReader):
+    """The stream reader of both sources: one feed per spec that
+    ``_parse_specs`` finds in the options, and one entry per feed in the
+    offset ``{"feeds": [i0, i1, ...]}`` (each feed's next frame index).
+
+    Feeds start on the first ``read``, which runs in Spark's driver-side
+    source runner. A planner or executor copy is pickled before any
+    ``read``, so it never starts a feed, never opens a second competing
+    connection, and answers ``readBetweenOffsets`` with nothing, logging
+    the frames it lost (the reference's at-most-once, SURVEY.md §2.1).
+
+    The feed owner follows the feed count: one feed runs in a thread of
+    the runner (`_FeedWorker`); two or more run one `feed_proc` child
+    each (`_ProcFeedWorker`). ``feed_id`` is appended to the rows when
+    ``schema`` has that column."""
+
+    def __init__(self, options: dict, schema: StructType | None = None):
         self._options = dict(options)
         self._specs = _parse_specs(self._options)
-        self._workers: list[_ProcFeedWorker] | None = None
+        self._feed_id = schema is not None and "feed_id" in schema.fieldNames()
+        self._feeds: list | None = None
 
-    def _ensure_workers(self) -> list[_ProcFeedWorker]:
-        if self._workers is None:
-            opts = self._options
-            parsed = json.loads(opts.get("interval_messages") or "[]")
-            msgs = [
+    def _open(self, starts: list[int]) -> list:
+        opts = self._options
+        parsed = json.loads(opts.get("interval_messages") or "[]")
+        common = {
+            "interval": float(opts.get("interval", 0) or 0),
+            "interval_messages": [
                 m if isinstance(m, str) else json.dumps(m) for m in parsed
-            ]
-            self._workers = []
-            for spec in self._specs:
-                # one decode core per socket
-                w = _ProcFeedWorker(
-                    {
-                        "url": spec["url"],
-                        "subscribe": spec["subscribe"],
-                        "interval": float(opts.get("interval", 0) or 0),
-                        "interval_messages": msgs,
-                        "reconnect_delay": float(
-                            opts.get("reconnect_delay", RECONNECT_DELAY_S)
-                        ),
-                    },
-                    retention=int(opts.get("retention", 100_000)),
-                )
-                w.start()
-                self._workers.append(w)
-        return self._workers
+            ],
+            "reconnect_delay": float(
+                opts.get("reconnect_delay", RECONNECT_DELAY_S)
+            ),
+        }
+        owner = _FeedWorker if len(self._specs) == 1 else _ProcFeedWorker
+        feeds = []
+        for spec, s in zip(self._specs, starts):
+            feed = owner(
+                {**spec, **common}, retention=int(opts.get("retention", 100_000))
+            )
+            # Checkpoint restart: the engine resumes from committed offset
+            # s, but a socket cannot replay — a fresh connection numbering
+            # from 0 would have its first s frames treated as consumed.
+            # Number it from s instead: restart means "continue from now",
+            # the reference's semantics (wsclient.hpp:158-162), with
+            # offsets kept monotonic for the engine's bookkeeping.
+            feed.jump(s)
+            feed.start()
+            feeds.append(feed)
+        self._feeds = feeds
+        return feeds
+
+    def _rows(self, i: int, start: int, end: int) -> list:
+        batches = self._feeds[i].batches(start, end)
+        return _with_feed_id(batches, i) if self._feed_id else batches
 
     def initialOffset(self) -> dict:
         return {"feeds": [0] * len(self._specs)}
 
     def read(self, start: dict) -> tuple:
-        # per-feed admission control (the kafka maxOffsetsPerTrigger
-        # analog, same rationale as the single-connection reader). The
-        # window opens at ``start``, the wrapper's prefetch offset — the
-        # end of the last batch read, not the last commit, which the
-        # engine only delivers while planning a later batch.
+        starts = _feed_offsets(start)
+        feeds = self._feeds if self._feeds is not None else self._open(starts)
+        # Admission control (the kafka maxOffsetsPerTrigger analog),
+        # per feed: a burst, or a backlog after restart, drains as
+        # several bounded batches instead of one giant one. The window
+        # opens at ``start``, the wrapper's prefetch offset — the end of
+        # the last batch read, not the last commit, which the engine only
+        # delivers while planning a later batch. 0 (default) = unlimited,
+        # the reference's drain-everything behavior.
         cap = int(self._options.get("max_records_per_batch", 0) or 0)
         batches, ends = [], []
-        for i, (w, s) in enumerate(zip(self._ensure_workers(), start["feeds"])):
-            # checkpoint restart: a fresh socket numbers from 0 but the
-            # engine resumes from committed offset s — baseline the
-            # connection there ("continue from now", at-most-once).
-            w.jump(s)
-            nxt, oldest = w.peek()
+        for i, (feed, s) in enumerate(zip(feeds, starts)):
+            nxt, oldest = feed.peek()
             e = min(nxt, max(s, oldest) + cap) if cap > 0 else nxt
             _warn_if_lost(self._specs[i]["url"], s, oldest, e)
-            w.mark_taken(e)
+            feed.mark_taken(e)
             if e > s:
-                batches += _unpack_frames(w.batches_between(s, e), i, s, e)
+                batches += self._rows(i, s, e)
             ends.append(e)
-        # a list iterator, not a generator: the wrapper's prefetch cache
-        # copy.copy()s it
+        # Arrow RecordBatches go straight into the JVM Arrow stream,
+        # skipping the runner's per-row converter; a list iterator, not
+        # a generator, because the wrapper's prefetch cache copy.copy()s it
         return iter(batches), {"feeds": ends}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # best-effort replay from the retention buffers; a reader with no
         # live feed degrades to the reference's at-most-once, counted
-        pairs = list(zip(start["feeds"], end["feeds"]))
-        if self._workers is None:
+        pairs = list(zip(_feed_offsets(start), _feed_offsets(end)))
+        if self._feeds is None:
             _warn_unserved(
                 [sp["url"] for sp, (s, e) in zip(self._specs, pairs) if e > s],
                 sum(e - s for s, e in pairs),
             )
             return iter(())
-        batches = []
-        for i, (w, (s, e)) in enumerate(zip(self._workers, pairs)):
-            batches += _unpack_frames(w.batches_between(s, e), i, s, e)
-        return iter(batches)
+        return iter([b for i, (s, e) in enumerate(pairs) for b in self._rows(i, s, e)])
 
     def commit(self, end: dict) -> None:
-        if self._workers is None:
-            return
-        for w, e in zip(self._workers, end["feeds"]):
-            w.prune(e)
+        if self._feeds is not None:
+            for feed, e in zip(self._feeds, _feed_offsets(end)):
+                feed.prune(e)
 
     def stop(self) -> None:
-        if self._workers is not None:
-            for w in self._workers:
-                w.stop()
+        for feed in self._feeds or ():
+            feed.stop()
 
 
 class MultiWebSocketStreamReader(_SimpleStreamReaderWrapper):
-    """N-connection stream reader: each configured url/subscription gets
-    its own `_ProcFeedWorker` (a `feed_proc` child running the shared
-    connection loop, plus a driver-side retention buffer) and its own
-    entry in the offset vector.
+    """The reader Spark runs for both sources: pyspark's prefetching
+    wrapper around `WebSocketStreamReader`, plus the ``stop()`` the
+    wrapper lacks. The source runner's ``finally: reader.stop()`` reaches
+    the feeds only through it; without it a stopped query's feed thread
+    kept redialing until the runner process exited.
 
-    Why this shape: the reference — and the single-connection `websocket`
-    source — is one socket, which makes the SOURCE the streaming path's scale
-    ceiling (measured 32.9k frames/s). Real feeds shard (per-symbol
-    subscriptions, per-shard endpoints); this source decodes each shard
-    on its own core.
-
-    Where the work runs: each connection lives in a `feed_proc` CHILD
-    PROCESS that decodes frames and ships packed batches up a pipe. The
-    reader is pyspark's prefetching wrapper around `_MultiFeedReader`,
-    so Spark's driver-side source runner calls ``read`` from
-    ``latestOffset``, unpacks the packed batches there with vectorized
-    code (`_unpack_frames`) and sends the Arrow batches straight to the
-    JVM block store as the microbatch's one input partition. No executor
+    Spark's driver-side source runner calls ``read`` from
+    ``latestOffset`` and sends the Arrow batches straight to the JVM
+    block store as the microbatch's one input partition. No executor
     Python task runs in the source stage; executors call ``read`` only
     for a batch the prefetch cache does not hold (a restart replay),
     which they cannot serve and count as lost (`_warn_unserved`). At the
@@ -819,28 +649,58 @@ class MultiWebSocketStreamReader(_SimpleStreamReaderWrapper):
     shard feeding a replayable log (the reference's Kafka), which is
     exactly the pipeline this repo's sink side implements.
 
-    Restart semantics are the single-connection source's "continue from
-    now" (at-most-once, SURVEY §2.1): sockets cannot replay, so the
-    first ``read`` after a resume from offset N jumps each fresh
-    connection to N; frames that arrived while down are lost on both
-    systems.
+    Restart semantics are "continue from now" (at-most-once, SURVEY
+    §2.1): sockets cannot replay, so the first ``read`` after a resume
+    from offset N numbers each fresh connection from N; frames that
+    arrived while down are lost on both systems.
     """
 
-    def __init__(self, options: dict):
-        super().__init__(_MultiFeedReader(options))
+    def __init__(self, options: dict, schema: StructType | None = None):
+        super().__init__(WebSocketStreamReader(options, schema))
 
     def stop(self) -> None:
         self.simple_reader.stop()
 
 
-class MultiWebSocketDataSource(DataSource):
-    """``spark.readStream.format("websocket_multi")`` after registration.
+class WebSocketDataSource(DataSource):
+    """``spark.readStream.format("websocket")`` after registration: the
+    reference's one socket, rows ``value binary, ws_timestamp timestamp``.
+
+    Options (mirroring config.json fields, ``/root/reference/src/main.cpp:
+    80-97``): ``url``, ``subscribe`` (message sent on every (re)connect),
+    ``interval`` + ``interval_messages`` (JSON array, re-sent every
+    interval), ``reconnect_delay``, ``retention`` (frames buffered per
+    feed), ``max_records_per_batch`` (per-feed admission cap; 0 =
+    unlimited).
+
+    The offset is ``{"feeds": [n]}``, the next frame index. A checkpoint
+    written with this source's earlier offset shape (an ``index`` key in
+    place of ``feeds``) resumes: `_feed_offsets` reads it as
+    ``{"feeds": [n]}``. One feed is read by a thread of Spark's source
+    runner, not a child process (see `WebSocketStreamReader`).
+    """
+
+    @classmethod
+    def name(cls) -> str:
+        return "websocket"
+
+    def schema(self) -> str:
+        return _SCHEMA_DDL
+
+    def streamReader(self, schema: StructType) -> MultiWebSocketStreamReader:
+        return MultiWebSocketStreamReader(dict(self.options), schema)
+
+
+class MultiWebSocketDataSource(WebSocketDataSource):
+    """``spark.readStream.format("websocket_multi")`` after registration:
+    N sockets through the same reader, rows tagged ``feed_id int`` (the
+    feed's position in the options).
 
     Options: ``urls`` (JSON array) [+ ``subscribes`` JSON array], or
-    ``url`` + ``fan_out``; plus the single-connection source's
-    ``subscribe``, ``interval``, ``interval_messages``,
-    ``reconnect_delay``, ``retention``, ``max_records_per_batch``
-    (applied per feed). Output schema adds ``feed_id int``."""
+    ``url`` + ``fan_out``; plus every ``websocket`` option, with
+    ``retention`` and ``max_records_per_batch`` applied per feed. Two or
+    more feeds each decode in their own `feed_proc` child process; one
+    feed is read in-process, as ``websocket`` reads it."""
 
     @classmethod
     def name(cls) -> str:
@@ -849,8 +709,10 @@ class MultiWebSocketDataSource(DataSource):
     def schema(self) -> str:
         return _MULTI_SCHEMA_DDL
 
-    def streamReader(self, schema: StructType) -> MultiWebSocketStreamReader:
-        return MultiWebSocketStreamReader(dict(self.options))
+
+def register_websocket_source(spark) -> None:
+    """Register the source under the name ``websocket`` (idempotent)."""
+    spark.dataSource.register(WebSocketDataSource)
 
 
 def register_websocket_multi_source(spark) -> None:

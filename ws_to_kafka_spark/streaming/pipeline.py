@@ -19,10 +19,13 @@ dropped, ``kafka_producer.cpp:54-56``); the Spark sink with checkpointing
 upgrades this to at-least-once. SURVEY.md §2.1 documents the deliberate
 non-goal of exactly-once.
 
-Scale note: the source is one partition per socket by nature; the sink
-fan-out is governed by Kafka partitioning on the record key. For
-multi-feed deployments, run one query per feed (isolated checkpoints,
-isolated backpressure) rather than unioning sockets into one query.
+Scale note: the source's one socket is read by a thread of Spark's
+driver-side source runner and reaches the query as one input partition
+per microbatch; the sink fan-out is governed by Kafka partitioning on the
+record key. For multi-feed deployments, ``websocket_multi`` reads N
+sockets through the same stream reader, each decoded in its own child
+process; feeds that need isolated checkpoints and backpressure run one
+query each.
 """
 
 from __future__ import annotations
